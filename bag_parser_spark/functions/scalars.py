@@ -110,24 +110,11 @@ def nullif_empty(c: Column) -> Column:
     return F.nullif(c, F.lit(""))
 
 
-def empty_if_null(c: Column) -> Column:
-    """P2: default-injection for absent fields (bag_parser.py:184,259-262)."""
-    return F.coalesce(c, F.lit(""))
-
-
 def pos_to_rd(pos: Column) -> tuple[Column, Column]:
     """P8/U3: 'x y [z]' posList string → (rd_x, rd_y) doubles
     (reference utils.py:196-198)."""
     parts = F.split(pos, " ")
     return parts[0].cast("double"), parts[1].cast("double")
-
-
-def first_point_of_geometry(geom: Column) -> Column:
-    """P7: first 'x y' pair from a '[x y z x y z …]' polygon string
-    (reference bag_parser.py:137-143)."""
-    stripped = F.regexp_replace(geom, r"^\[|\]$", "")
-    parts = F.split(stripped, " ")
-    return F.concat_ws(" ", parts[0], parts[1])
 
 
 def bracket_wrap(c: Column) -> Column:

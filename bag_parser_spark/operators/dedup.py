@@ -1481,96 +1481,3 @@ def winnowing_pairs(
         .agg(F.count(F.lit(1)).alias("shared_fps"))
         .filter(F.col("shared_fps") >= min_shared)
     )
-
-
-def winnowing_pairs_incremental(
-    new_df: DataFrame,
-    base_fps: DataFrame,
-    id_col: str,
-    text_col: str,
-    gram_k: int = 4,
-    window_w: int = 4,
-    min_shared: int = 2,
-    max_fp_df: int | None = None,
-    base_fp_df: DataFrame | None = None,
-) -> DataFrame:
-    """Incremental winnowing near-dup pairs: a NEW batch against an
-    already-fingerprinted corpus — emits (new × base) and (new × new)
-    pairs, never (base × base). Identical to ``winnowing_pairs(base ∪
-    new)`` minus the base-only pairs (fingerprinting is per-doc, so the
-    identity is exact — unit-tested), at the cost of fingerprinting only
-    the increment.
-
-    ``base_fps`` is the corpus's stored (``__id__``, ``fp``) fingerprint
-    artifact from ``winnow_fingerprint_rows`` — built with the SAME
-    (gram_k, window_w) or buckets never match. Store it bucketed by
-    ``fp`` (``sources.parquet.write_bucketed``) and the pair join reads
-    the corpus side exchange-free, shuffling only the increment. Caller
-    contract: base and new id spaces are disjoint.
-
-    The ``max_fp_df`` boilerplate cap stays EXACT under increments: the
-    hot set is computed from total df = base df + increment df, where
-    base df comes from ``base_fp_df`` (the (fp, __df__) rollup an
-    incremental pipeline maintains alongside the fingerprint artifact;
-    derived from ``base_fps`` here when not supplied). The increment
-    only ever aggregates its own fingerprints and joins the fp-keyed
-    rollup — base text is never rescanned, base fps never re-counted.
-    """
-    from pyspark.sql.types import StringType
-
-    # ADVICE r11: r11 switched fingerprints to BINARY (unhex(md5)); a
-    # stored artifact built by a pre-r11 version carries hex STRINGS,
-    # and string-vs-binary equi-joins silently match nothing — fail
-    # loudly instead of returning an empty pair set.
-    if isinstance(base_fps.schema["fp"].dataType, StringType):
-        raise ValueError(
-            "base_fps.fp is a hex STRING — an artifact from a pre-r11 "
-            "build; re-fingerprint the corpus (fps are binary "
-            "unhex(md5) since r11) or unhex the stored column"
-        )
-    fn = winnow_fingerprint_rows(
-        new_df, id_col, text_col, gram_k, window_w
-    ).persist()
-    fb = base_fps.select(F.col("__id__"), F.col("fp"))
-    if max_fp_df is not None:
-        if base_fp_df is None:
-            base_fp_df = fb.groupBy("fp").agg(
-                F.count(F.lit(1)).alias("__df__")
-            )
-        new_counts = fn.groupBy("fp").agg(
-            F.count(F.lit(1)).alias("__dfn__")
-        )
-        hot = (
-            new_counts.join(base_fp_df, "fp", "full_outer")
-            .select(
-                "fp",
-                (
-                    F.coalesce("__dfn__", F.lit(0))
-                    + F.coalesce("__df__", F.lit(0))
-                ).alias("__tot__"),
-            )
-            .filter(F.col("__tot__") > max_fp_df)
-            .select("fp")
-        )
-        fn = fn.join(hot, "fp", "left_anti")
-        fb = fb.join(hot, "fp", "left_anti")
-    a = fn.select(F.col("fp"), F.col("__id__").alias("id_a"))
-    b = fn.select(F.col("fp"), F.col("__id__").alias("id_b"))
-    new_new = (
-        a.join(b, "fp")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("shared_fps"))
-    )
-    new_base = (
-        a.join(fb.select("fp", F.col("__id__").alias("__bid__")), "fp")
-        .select(
-            F.least("id_a", "__bid__").alias("id_a"),
-            F.greatest("id_a", "__bid__").alias("id_b"),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("shared_fps"))
-    )
-    return new_new.unionAll(new_base).filter(
-        F.col("shared_fps") >= min_shared
-    )

@@ -242,57 +242,52 @@ def _py_cosine(a: list[float], b: list[float]) -> float:
     return d / (math.sqrt(na) * math.sqrt(nb))
 
 
-def ivf_topk(
+def _assign_cells(
     df: DataFrame,
     id_col: str,
     vec_col: str,
-    query_vec: list[float],
-    k: int,
     centroids: DataFrame,
-    nprobe: int = 2,
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """IVF (inverted-file) ANN: coarse-quantize every vector to its nearest
-    centroid cell, then probe only the ``nprobe`` cells nearest the query.
+    """Nearest-centroid (cosine) cell of every vector: the coarse
+    assignment shared by ``ivf_topk``, ``semantic_dedup_pairs`` and
+    ``hard_negatives_blocked``. Returns (__vid__, cell, __vec__, *carry).
 
     ``centroids`` is (cid, cv) and small by design (~√n cells), so the
-    assignment pass is a broadcast crossJoin + per-vector argmax as a
-    map-side partial aggregation: every copy of a vector lives in the
-    partition that produced it (broadcast join never splits a left row's
-    fan-out), so the partial ``max(struct(sim, -cid, vec))`` collapses the
-    |corpus|×|cells| product back to one row per vector BEFORE the
-    exchange — the shuffle moves n rows, not n·√n (a row_number() window
-    here would shuffle the whole product; round-1 flaw). At 100 TB the
-    cell id becomes a partition column of the stored corpus, so probing
-    prunes partitions at the scan and the per-query cost is
-    |cell|·nprobe, not n. Probe-cell selection runs on the driver over
-    the collected centroid set (tiny). Approximate by construction —
-    recall < 1 when the true neighbor lands in an unprobed cell; cosine
-    math matches cosine_topk bitwise.
+    pass is a broadcast crossJoin + per-vector argmax as a map-side
+    partial aggregation: every copy of a vector lives in the partition
+    that produced it (broadcast join never splits a left row's
+    fan-out), so the partial min collapses the |corpus|×|cells| product
+    back to one row per vector BEFORE the exchange — the shuffle moves
+    n rows, not n·√n (a row_number() window here would shuffle the
+    whole product; round-1 flaw). Norms are computed once per
+    vector/centroid (Column-side, tiny); the product scoring itself
+    runs Arrow-vectorized — the hot stage.
+
+    ``carry`` names columns that ride the argmax struct to the output:
+    ``__vnorm__`` (the vector norm computed here) or a column of ``df``.
     """
-    dim = len(query_vec)
     c = centroids.select("cid", "cv")
-    # norms once per vector/centroid (Column-side, tiny); the |corpus|×|cells|
-    # assignment scoring itself runs Arrow-vectorized — the hot stage here
-    pair_cos = _arrow_pair_cosine()
-    # argmax = min over struct(-sim, cid, vec): field-order comparison gives
-    # max sim (negated — sim is always a double, so the negation lives on
-    # the numeric field) with deterministic min-cid tiebreak for ANY
-    # orderable cid type (long, string, UUID-as-string, date); vec rides
-    # along so no second join is needed. This is max_by semantics plus a
-    # total order, still a partial-aggregable min — the shuffle moves one
-    # row per vector, never the |corpus|×|cells| product.
+    # argmax = min over struct(-sim, cid, vec, …): field-order comparison
+    # gives max sim (negated — sim is always a double, so the negation
+    # lives on the numeric field) with deterministic min-cid tiebreak for
+    # ANY orderable cid type (long, string, UUID-as-string, date); the
+    # vector and carried columns ride along so no second join is needed
     best = F.min(
         F.struct(
             (-F.col("__sim__")).alias("__negsim__"),
             F.col("cid").alias("c"),
             F.col("__vec__").alias("v"),
+            *carry,
         )
     ).alias("__best__")
-    assigned = (
+    pair_cos = _arrow_pair_cosine()
+    return (
         fan_out_cpu_dense(
             df.select(
                 F.col(id_col).alias("__vid__"),
                 F.col(vec_col).alias("__vec__"),
+                *[k for k in carry if k != "__vnorm__"],
                 norm(F.col(vec_col)).alias("__vnorm__"),
             ),
             "__vid__",
@@ -309,18 +304,138 @@ def ivf_topk(
         .agg(best)
         .select(
             "__vid__",
+            F.col("__best__.c").alias("cell"),
             F.col("__best__.v").alias("__vec__"),
-            F.col("__best__.c").alias("cid"),
+            *[F.col(f"__best__.{k}").alias(k) for k in carry],
         )
     )
-    cents = [(r["cid"], [float(x) for x in r["cv"]]) for r in c.collect()]
+
+
+def _block_pairs(
+    rows: DataFrame,
+    block: str,
+    ids: tuple[str, str],
+    pred: Column,
+    threshold: float | None = None,
+    big_cell_cutoff: int | None = None,
+    salt: int = 1,
+) -> DataFrame:
+    """Exact Arrow cosine of every pair of ``rows`` that share a
+    ``block`` value and satisfy ``pred`` — the partition-first,
+    score-locally step of the similarity family, as one block
+    equi-join.
+
+    ``rows`` holds (block, __vid__, __vec__, __vnorm__, …). The right
+    side of the self-join carries every column renamed with a ``2``
+    suffix (``cell`` → ``__cell2__``, ``__vid__`` → ``__vid2__``), so
+    ``pred`` compares the two sides, e.g. ``F.col("__vid__") <
+    F.col("__vid2__")``. Returns (ids[0], ids[1], block, cosine_sim,
+    __salt2__) with the cosine rounded to 6 and, given ``threshold``,
+    only pairs at or above it (the cut runs on the ROUNDED value, so it
+    is engine-reproducible). ``__salt2__`` is the right id's hash into
+    ``salt`` sub-keys.
+
+    Big-block guard (with ``big_cell_cutoff``): blocks larger than the
+    cutoff — a degenerate giant cell concentrates its quadratic
+    expansion in few tasks, the identity-collapse lesson of the
+    image-hash dedup (SCALE.md r5) — route through a SALTED join: the
+    left side replicated across ``salt`` sub-keys, the right side
+    hashed into them, spreading each giant block's output over ``salt``
+    tasks instead of one. Small blocks keep the plain equi-join:
+    salting everything would replicate every vector ``salt``x for no
+    benefit. Every pair matches under exactly one salt value, so the
+    split is layout-only and the result is identical with or without
+    it. The guard is EAGER: one Spark job (per-block counts; the list is
+    bounded by the number of blocks, so it collects) runs at call time —
+    persist ``rows`` first. Without ``big_cell_cutoff`` the helper is
+    lazy.
+    """
+    if big_cell_cutoff is not None and salt < 1:
+        raise ValueError(f"salt must be >= 1, got {salt}")
+
+    def renamed(k: str) -> str:
+        return f"__{k.strip('_')}2__"
+
+    right = rows.select(
+        *[F.col(k).alias(renamed(k)) for k in rows.columns],
+        F.pmod(F.xxhash64("__vid__"), F.lit(salt)).alias("__salt2__"),
+    )
+    on = (F.col(block) == F.col(renamed(block))) & pred
+    pair_cos = _arrow_pair_cosine()
+
+    def join(left: DataFrame, cond: Column) -> DataFrame:
+        out = left.join(right, cond).select(
+            F.col("__vid__").alias(ids[0]),
+            F.col("__vid2__").alias(ids[1]),
+            block,
+            F.round(
+                pair_cos(
+                    F.col("__vec__"), F.col("__vec2__"),
+                    F.col("__vnorm__"), F.col("__vnorm2__"),
+                ),
+                6,
+            ).alias("cosine_sim"),
+            "__salt2__",
+        )
+        if threshold is None:
+            return out
+        return out.filter(F.col("cosine_sim") >= threshold)
+
+    if big_cell_cutoff is None:
+        return join(rows, on)
+    big = [
+        r[block]
+        for r in rows.groupBy(block)
+        .agg(F.count(F.lit(1)).alias("__n__"))
+        .filter(F.col("__n__") > big_cell_cutoff)
+        .collect()
+    ]
+    if not big:
+        return join(rows, on)
+    small = join(rows.filter(~F.col(block).isin(big)), on)
+    salted = rows.filter(F.col(block).isin(big)).withColumn(
+        "__salt__", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
+    )
+    return small.unionAll(
+        join(salted, on & (F.col("__salt__") == F.col("__salt2__")))
+    )
+
+
+def ivf_topk(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    query_vec: list[float],
+    k: int,
+    centroids: DataFrame,
+    nprobe: int = 2,
+) -> DataFrame:
+    """IVF (inverted-file) ANN: coarse-quantize every vector to its nearest
+    centroid cell, then probe only the ``nprobe`` cells nearest the query.
+
+    ``centroids`` is (cid, cv) and small by design (~√n cells), so the
+    assignment pass (``_assign_cells``) is a broadcast crossJoin +
+    per-vector argmax as a map-side partial aggregation — the shuffle
+    moves n rows, not n·√n. At 100 TB the cell id becomes a partition
+    column of the stored corpus, so probing prunes partitions at the
+    scan and the per-query cost is |cell|·nprobe, not n. Probe-cell
+    selection runs on the driver over the collected centroid set
+    (tiny). Approximate by construction — recall < 1 when the true
+    neighbor lands in an unprobed cell; cosine math matches cosine_topk
+    bitwise.
+    """
+    assigned = _assign_cells(df, id_col, vec_col, centroids)
+    cents = [
+        (r["cid"], [float(x) for x in r["cv"]])
+        for r in centroids.select("cid", "cv").collect()
+    ]
     ranked = sorted(
         cents, key=lambda t: (-_py_cosine(t[1], query_vec), t[0])
     )
     probe_cids = [cid for cid, _ in ranked[:nprobe]]
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     scored = (
-        assigned.filter(F.col("cid").isin(probe_cids))
+        assigned.filter(F.col("cell").isin(probe_cids))
         .select(
             F.col("__vid__").alias(id_col),
             F.round(cosine(F.col("__vec__"), q), 6).alias("cosine_sim"),
@@ -359,21 +474,16 @@ def semantic_dedup_pairs(
     Scale: pick |cells| ∝ n / target_cell_size so per-cell pair cost
     stays bounded as the corpus grows; store the corpus partitioned by
     cell and the pair join is partition-local. A degenerate giant cell
-    concentrates its quadratic expansion in few tasks — the same
-    identity-collapse lesson as the image-hash dedup (SCALE.md r5), and
-    at 100 TB a when, not an if (one viral template embeds to one point).
-    Guard: cells larger than ``big_cell_cutoff`` rows (a tiny per-cell
-    count over the cached assignment; the big-cell list is bounded by
-    |cells|, so it collects) route through a SALTED self-join — the left
-    side replicated across ``salt`` sub-keys, the right side hashed into
-    them — spreading each giant cell's quadratic output over ``salt``
-    tasks instead of one. Small cells keep the plain equi-join: salting
-    everything would replicate every vector ``salt``x for no benefit.
-    The split is layout-only (each pair matches under exactly one salt),
-    so the result — and the oracle — is identical with or without it.
-    Approximate by construction: a near-dup pair straddling a cell
-    boundary is missed (SemDeDup accepts this; raise |cells| recall via
-    multi-probe assignment if needed).
+    concentrates its quadratic expansion in few tasks — at 100 TB a
+    when, not an if (one viral template embeds to one point). Guard:
+    cells larger than ``big_cell_cutoff`` rows route through a SALTED
+    self-join spreading each giant cell's pairs over ``salt`` tasks
+    (``salt`` >= 1, else ValueError); small cells keep the plain
+    equi-join. The split is layout-only, so the result — and the
+    oracle — is identical with or without it. Approximate by
+    construction: a near-dup pair straddling a cell boundary is missed
+    (SemDeDup accepts this; raise |cells| recall via multi-probe
+    assignment if needed).
 
     NOTE — construction is EAGER: the big-cell guard runs one Spark job
     (per-cell counts over the cached assignment) at call time, before
@@ -383,105 +493,16 @@ def semantic_dedup_pairs(
     sessions) can unpersist it; without a registry the cached blocks
     live until the session evicts them.
     """
-    pair_cos = _arrow_pair_cosine()
-    c = centroids.select("cid", "cv")
-    best = F.min(
-        F.struct(
-            (-F.col("__sim__")).alias("__negsim__"),
-            F.col("cid").alias("c"),
-            F.col("__vec__").alias("v"),
-            F.col("__vnorm__").alias("n"),
-        )
-    ).alias("__best__")
-    assigned = (
-        fan_out_cpu_dense(
-            df.select(
-                F.col(id_col).alias("__vid__"),
-                F.col(vec_col).alias("__vec__"),
-                norm(F.col(vec_col)).alias("__vnorm__"),
-            ),
-            "__vid__",
-        )
-        .crossJoin(F.broadcast(c.withColumn("__cnorm__", norm(F.col("cv")))))
-        .withColumn(
-            "__sim__",
-            pair_cos(
-                F.col("__vec__"), F.col("cv"),
-                F.col("__vnorm__"), F.col("__cnorm__"),
-            ),
-        )
-        .groupBy("__vid__")
-        .agg(best)
-        .select(
-            "__vid__",
-            F.col("__best__.c").alias("cell"),
-            F.col("__best__.v").alias("__vec__"),
-            F.col("__best__.n").alias("__vnorm__"),
-        )
-        .persist()
-    )
+    assigned = _assign_cells(
+        df, id_col, vec_col, centroids, carry=("__vnorm__",)
+    ).persist()
     if cache_registry is not None:
         cache_registry.append(assigned)
-
-    def pair_join(left: DataFrame, extra_cond=None) -> DataFrame:
-        b = assigned.select(
-            F.col("cell").alias("__cell2__"),
-            F.col("__vid__").alias("id_b"),
-            F.col("__vec__").alias("__bvec__"),
-            F.col("__vnorm__").alias("__bnorm__"),
-            F.pmod(F.xxhash64("__vid__"), F.lit(salt)).alias("__salt2__"),
-        )
-        cond = (F.col("cell") == F.col("__cell2__")) & (
-            F.col("id_a") < F.col("id_b")
-        )
-        if extra_cond is not None:
-            cond = cond & extra_cond
-        return (
-            left.join(b, cond)
-            .select(
-                "id_a",
-                "id_b",
-                "cell",
-                F.round(
-                    pair_cos(
-                        F.col("__avec__"), F.col("__bvec__"),
-                        F.col("__anorm__"), F.col("__bnorm__"),
-                    ),
-                    6,
-                ).alias("cosine_sim"),
-            )
-            .filter(F.col("cosine_sim") >= threshold)
-        )
-
-    a = assigned.select(
-        "cell",
-        F.col("__vid__").alias("id_a"),
-        F.col("__vec__").alias("__avec__"),
-        F.col("__vnorm__").alias("__anorm__"),
-    )
-    # cell-size guard: per-cell counts over the cached assignment (tiny —
-    # one row per cell, bounded by |centroids|, so the collect is safe)
-    big_cells = [
-        r["cell"]
-        for r in assigned.groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("__n__"))
-        .filter(F.col("__n__") > big_cell_cutoff)
-        .collect()
-    ]
-    if not big_cells:
-        return pair_join(a)
-    small = pair_join(a.filter(~F.col("cell").isin(big_cells)))
-    # salted path: left replicated across `salt` sub-keys, right hashed
-    # into them — each giant cell's quadratic output spreads over `salt`
-    # tasks; every (id_a, id_b) pair matches under exactly one salt value
-    a_salted = a.filter(F.col("cell").isin(big_cells)).withColumn(
-        "__salt__", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-    )
-    big = pair_join(
-        a_salted,
-        extra_cond=(F.col("__salt__") == F.col("__salt2__")),
-    )
-    return small.unionAll(big)
+    return _block_pairs(
+        assigned, "cell", ("id_a", "id_b"),
+        F.col("__vid__") < F.col("__vid2__"),
+        threshold=threshold, big_cell_cutoff=big_cell_cutoff, salt=salt,
+    ).select("id_a", "id_b", "cell", "cosine_sim")
 
 
 def hard_negatives_blocked(
@@ -512,7 +533,8 @@ def hard_negatives_blocked(
     assignment — one row per vector ever shuffles; same guarded big-cell
     routing — cells above ``big_cell_cutoff`` mine through a salted
     left-replicated join so a degenerate giant cell spreads over
-    ``salt`` tasks). On top, top-k selection is TWO-stage everywhere:
+    ``salt`` tasks; ``salt`` >= 1, else ValueError). On top, top-k
+    selection is TWO-stage everywhere:
     a partial row_number per (query, candidate-salt) keeps ≤k rows per
     sub-bucket, then the global per-query rank runs over ≤ salt·k
     survivors — so no window task ever holds a whole giant cell's
@@ -531,102 +553,17 @@ def hard_negatives_blocked(
     """
     from pyspark.sql import Window
 
-    pair_cos = _arrow_pair_cosine()
-    c = centroids.select("cid", "cv")
-    best = F.min(
-        F.struct(
-            (-F.col("__sim__")).alias("__negsim__"),
-            F.col("cid").alias("c"),
-            F.col("__vec__").alias("v"),
-            F.col("__vnorm__").alias("n"),
-            F.col("__lab__").alias("l"),
-        )
-    ).alias("__best__")
-    assigned = (
-        fan_out_cpu_dense(
-            df.select(
-                F.col(id_col).alias("__vid__"),
-                F.col(vec_col).alias("__vec__"),
-                F.col(label_col).alias("__lab__"),
-                norm(F.col(vec_col)).alias("__vnorm__"),
-            ),
-            "__vid__",
-        )
-        .crossJoin(F.broadcast(c.withColumn("__cnorm__", norm(F.col("cv")))))
-        .withColumn(
-            "__sim__",
-            pair_cos(
-                F.col("__vec__"), F.col("cv"),
-                F.col("__vnorm__"), F.col("__cnorm__"),
-            ),
-        )
-        .groupBy("__vid__")
-        .agg(best)
-        .select(
-            "__vid__",
-            F.col("__best__.c").alias("cell"),
-            F.col("__best__.v").alias("__vec__"),
-            F.col("__best__.n").alias("__vnorm__"),
-            F.col("__best__.l").alias("__lab__"),
-        )
-        .persist()
-    )
+    assigned = _assign_cells(
+        df.withColumn("__lab__", F.col(label_col)), id_col, vec_col,
+        centroids, carry=("__vnorm__", "__lab__"),
+    ).persist()
     if cache_registry is not None:
         cache_registry.append(assigned)
-    cand = assigned.select(
-        F.col("cell").alias("__cell2__"),
-        F.col("__vid__").alias("neg_id"),
-        F.col("__lab__").alias("__nlab__"),
-        F.col("__vec__").alias("__nvec__"),
-        F.col("__vnorm__").alias("__nnorm__"),
-        F.pmod(F.xxhash64("neg_id"), F.lit(salt)).alias("__salt2__"),
+    scored = _block_pairs(
+        assigned, "cell", ("query_id", "neg_id"),
+        F.col("__lab__") != F.col("__lab2__"),
+        big_cell_cutoff=big_cell_cutoff, salt=salt,
     )
-
-    def mine(left: DataFrame, extra_cond=None) -> DataFrame:
-        cond = (F.col("cell") == F.col("__cell2__")) & (
-            F.col("__qlab__") != F.col("__nlab__")
-        )
-        if extra_cond is not None:
-            cond = cond & extra_cond
-        return left.join(cand, cond).select(
-            "query_id",
-            "neg_id",
-            "cell",
-            F.round(
-                pair_cos(
-                    F.col("__qvec__"), F.col("__nvec__"),
-                    F.col("__qnorm__"), F.col("__nnorm__"),
-                ),
-                6,
-            ).alias("cosine_sim"),
-            "__salt2__",
-        )
-
-    q = assigned.select(
-        "cell",
-        F.col("__vid__").alias("query_id"),
-        F.col("__vec__").alias("__qvec__"),
-        F.col("__vnorm__").alias("__qnorm__"),
-        F.col("__lab__").alias("__qlab__"),
-    )
-    big_cells = [
-        r["cell"]
-        for r in assigned.groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("__n__"))
-        .filter(F.col("__n__") > big_cell_cutoff)
-        .collect()
-    ]
-    if not big_cells:
-        scored = mine(q)
-    else:
-        small = mine(q.filter(~F.col("cell").isin(big_cells)))
-        q_salted = q.filter(F.col("cell").isin(big_cells)).withColumn(
-            "__salt__", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-        )
-        big = mine(
-            q_salted, extra_cond=(F.col("__salt__") == F.col("__salt2__"))
-        )
-        scored = small.unionAll(big)
     order = (F.col("cosine_sim").desc(), F.col("neg_id").asc())
     w_partial = Window.partitionBy("query_id", "__salt2__").orderBy(*order)
     w_final = Window.partitionBy("query_id").orderBy(*order)
@@ -1149,49 +1086,19 @@ def embedding_neardup_pairs(
     if not collapse:
         b = fan_out_cpu_dense(
             df.select(
-                F.col(id_col).alias("__mid__"),
-                F.col(vec_col).alias("__mvec__"),
-                norm(F.col(vec_col)).alias("__mnorm__"),
+                F.col(id_col).alias("__vid__"),
+                F.col(vec_col).alias("__vec__"),
+                norm(F.col(vec_col)).alias("__vnorm__"),
                 lsh_bucket_expr(F.col(vec_col), planes).alias("__bucket__"),
             ),
-            "__mid__",
+            "__vid__",
         ).persist()
         if cache_registry is not None:
             cache_registry.append(b)
-        a = b.select(
-            F.col("__bucket__"),
-            F.col("__mid__").alias("a_id"),
-            F.col("__mvec__").alias("__avec__"),
-            F.col("__mnorm__").alias("__anorm__"),
-        )
-        c = b.select(
-            F.col("__bucket__").alias("__bucket2__"),
-            F.col("__mid__").alias("b_id"),
-            F.col("__mvec__").alias("__bvec__"),
-            F.col("__mnorm__").alias("__bnorm__"),
-        )
-        pairs = a.join(
-            c,
-            (F.col("__bucket__") == F.col("__bucket2__"))
-            & (F.col("a_id") < F.col("b_id")),
-        )
-        pair_cos = _arrow_pair_cosine()
-        return (
-            pairs.select(
-                "a_id",
-                "b_id",
-                F.round(
-                    pair_cos(
-                        F.col("__avec__"),
-                        F.col("__bvec__"),
-                        F.col("__anorm__"),
-                        F.col("__bnorm__"),
-                    ),
-                    6,
-                ).alias("cosine_sim"),
-            )
-            .filter(F.col("cosine_sim") >= threshold)
-        )
+        return _block_pairs(
+            b, "__bucket__", ("a_id", "b_id"),
+            F.col("__vid__") < F.col("__vid2__"), threshold=threshold,
+        ).select("a_id", "b_id", "cosine_sim")
     # one shuffle assigns every instance its class rep (min id over the
     # identical-vector class) — a groupBy + join-back would shuffle the
     # vectors twice for the same information
@@ -1210,48 +1117,18 @@ def embedding_neardup_pairs(
     reps = (
         mem_full.filter(F.col("__mid__") == F.col("__rid__"))
         .select(
-            "__rid__",
-            "__mvec__",
-            norm(F.col("__mvec__")).alias("__rnorm__"),
+            F.col("__rid__").alias("__vid__"),
+            F.col("__mvec__").alias("__vec__"),
+            norm(F.col("__mvec__")).alias("__vnorm__"),
             lsh_bucket_expr(F.col("__mvec__"), planes).alias("__bucket__"),
         )
         .persist()
     )
     if cache_registry is not None:
         cache_registry.append(reps)
-    a = reps.select(
-        F.col("__bucket__"),
-        F.col("__rid__").alias("__ra__"),
-        F.col("__mvec__").alias("__avec__"),
-        F.col("__rnorm__").alias("__anorm__"),
-    )
-    c = reps.select(
-        F.col("__bucket__").alias("__bucket2__"),
-        F.col("__rid__").alias("__rb__"),
-        F.col("__mvec__").alias("__bvec__"),
-        F.col("__rnorm__").alias("__bnorm__"),
-    )
-    pair_cos = _arrow_pair_cosine()
-    rep_pairs = (
-        a.join(
-            c,
-            (F.col("__bucket__") == F.col("__bucket2__"))
-            & (F.col("__ra__") < F.col("__rb__")),
-        )
-        .select(
-            "__ra__",
-            "__rb__",
-            F.round(
-                pair_cos(
-                    F.col("__avec__"),
-                    F.col("__bvec__"),
-                    F.col("__anorm__"),
-                    F.col("__bnorm__"),
-                ),
-                6,
-            ).alias("cosine_sim"),
-        )
-        .filter(F.col("cosine_sim") >= threshold)
+    rep_pairs = _block_pairs(
+        reps, "__bucket__", ("__ra__", "__rb__"),
+        F.col("__vid__") < F.col("__vid2__"), threshold=threshold,
     )
     ma = mem.select(F.col("__rid__").alias("__ra__"), F.col("__mid__").alias("__ida__"))
     mb = mem.select(F.col("__rid__").alias("__rb__"), F.col("__mid__").alias("__idb__"))
@@ -1266,13 +1143,13 @@ def embedding_neardup_pairs(
     )
     self_cos = (
         reps.select(
-            "__rid__",
+            F.col("__vid__").alias("__rid__"),
             F.round(
-                pair_cos(
-                    F.col("__mvec__"),
-                    F.col("__mvec__"),
-                    F.col("__rnorm__"),
-                    F.col("__rnorm__"),
+                _arrow_pair_cosine()(
+                    F.col("__vec__"),
+                    F.col("__vec__"),
+                    F.col("__vnorm__"),
+                    F.col("__vnorm__"),
                 ),
                 6,
             ).alias("cosine_sim"),
@@ -1312,7 +1189,6 @@ def knn_join_brute(
     right_id: str,
     vec_col: str,
     k: int,
-    dim: int | None = None,
 ) -> DataFrame:
     """All-pairs k-NN join (broadcast the smaller probe side, per-probe
     top-k via window). Exact; quadratic — the LSH variant is the scale path."""
@@ -1378,50 +1254,3 @@ def quantize_int8(
         F.greatest(F.lit(-127), F.least(F.lit(127), q)).alias("q"),
         "scale",
     )
-
-
-def lsh_multitable_topk(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_vec: list[float],
-    k: int,
-    num_planes: int = 8,
-    num_tables: int = 4,
-) -> DataFrame:
-    """Multi-table hyperplane LSH ANN: the standard recall upgrade over
-    lsh_bucket_topk — ``num_tables`` independent plane sets, candidate =
-    union of the query's bucket in each table, exact cosine rescoring of
-    the deduped candidates. Recall rises with tables at proportional
-    candidate cost (measured per-dataset by the sim_ann_recall catalog
-    query: 1 table ≈ 0.09, 4 tables ≈ 0.26 recall@10 on the synthetic
-    64-dim embeddings).
-
-    Scale shape: each table's bucket predicate is a pushed-down literal
-    filter OR'd across tables — one scan, no shuffle until the top-k
-    heap; at 100 TB the (table, bucket) pair is the partition key and the
-    scan prunes to num_tables directories.
-    """
-    if num_tables < 1:
-        raise ValueError(f"num_tables must be >= 1, got {num_tables}")
-    dim = len(query_vec)
-    pred = None
-    for t in range(num_tables):
-        planes = [
-            _pseudo_random_plane(t * num_planes + p, dim)
-            for p in range(num_planes)
-        ]
-        qb = "".join(
-            "1" if sum(q * w for q, w in zip(query_vec, plane)) >= 0 else "0"
-            for plane in planes
-        )
-        clause = lsh_bucket_expr(F.col(vec_col), planes) == F.lit(qb)
-        pred = clause if pred is None else (pred | clause)
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    scored = df.filter(pred).select(
-        F.col(id_col),
-        F.round(cosine(F.col(vec_col), q), 6).alias("cosine_sim"),
-    )
-    return scored.orderBy(
-        F.col("cosine_sim").desc(), F.col(id_col).asc()
-    ).limit(k)

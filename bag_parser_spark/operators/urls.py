@@ -116,13 +116,6 @@ def host_only(url: Column) -> Column:
     return F.split(canonical_host(hostport, F.lower(scheme)), ":", 2).getItem(0)
 
 
-def suffix_table(spark: SparkSession) -> DataFrame:
-    """The public-suffix list as a broadcastable one-column table with
-    the per-suffix label count (a 'co.uk' rule spans two labels)."""
-    rows = [(s, s.count(".") + 1) for s in PUBLIC_SUFFIXES]
-    return spark.createDataFrame(rows, "suffix string, labels int")
-
-
 def with_registered_domain(
     df: DataFrame,
     host_col: str,

@@ -2476,7 +2476,7 @@ def q_knn_join(spark, sf_dir):
     probes = e.filter(F.col("vec_id") < 16)
     return similarity.knn_join_brute(
         probes, e, left_id="vec_id", right_id="vec_id", vec_col="embedding",
-        k=3, dim=64,
+        k=3,
     )
 
 
@@ -2668,7 +2668,6 @@ def q_sim_ann_recall(spark, sf_dir):
         right_id="vec_id",
         vec_col="embedding",
         k=_ANN_K,
-        dim=_ANN_DIM,
     ).select("qid", "cid").persist()
     nb = brute.groupBy("qid").agg(F.count(F.lit(1)).alias("n_brute"))
     nc1 = (

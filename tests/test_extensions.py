@@ -1181,27 +1181,6 @@ def test_k_anonymity_report_counts(spark):
     assert r["min_l_diversity"] == 1  # the singleton group
 
 
-def test_lsh_multitable_superset_of_single_table(spark):
-    """Multi-table LSH candidates contain every single-table candidate
-    (table 0 uses the same planes), so its top-k cosine can only improve:
-    the k-th best multi-table score >= the k-th best single-table score."""
-    from bag_parser_spark.operators import similarity
-    from bag_parser_spark.sources.parquet import load_table
-
-    e = load_table(spark, "/root/testdata/sf0.01", "embeddings")
-    qv = [float(x) for x in e.filter(F.col("vec_id") == 0).head()["embedding"]]
-    one = similarity.lsh_bucket_topk(
-        e, id_col="vec_id", vec_col="embedding", query_vec=qv, k=10
-    ).collect()
-    multi = similarity.lsh_multitable_topk(
-        e, id_col="vec_id", vec_col="embedding", query_vec=qv, k=10
-    ).collect()
-    assert len(multi) >= len(one)
-    assert min(r["cosine_sim"] for r in multi) >= min(
-        r["cosine_sim"] for r in one
-    )
-
-
 def test_multimodal_honors_caller_id_column(spark):
     """id_col must flow through to the OUTPUT schema — a caller keyed on
     vec_id must not get rows silently renamed to doc_id."""
@@ -1581,6 +1560,13 @@ def test_semantic_dedup_salts_giant_cells(spark):
     )
     assert len(groups) >= 6  # 8 salt keys, allow hash collisions
     assert max(g["count"] for g in groups) < len(sv)
+    # a salt below 1 is rejected up front: 0 would fail only at
+    # execution (REMAINDER_BY_ZERO) and -2 would silently drop pairs
+    for bad in (0, -2):
+        with pytest.raises(ValueError, match="salt must be >= 1"):
+            similarity.semantic_dedup_pairs(
+                df, **kw, big_cell_cutoff=10, salt=bad
+            )
 
 
 def test_segment_dup_stats_known_values(spark):
@@ -1744,6 +1730,11 @@ def test_hard_negatives_blocked_salted_path_identity(spark):
     assert sorted(map(tuple, salted), key=key) == sorted(
         map(tuple, plain), key=key
     )
+    for bad in (0, -2):
+        with pytest.raises(ValueError, match="salt must be >= 1"):
+            similarity.hard_negatives_blocked(
+                df, **kw, big_cell_cutoff=1, salt=bad
+            )
 
 
 def test_remove_duplicate_spans_known_values(spark):
@@ -2954,49 +2945,6 @@ def test_lang_profile_tie_breaks_in_profile_order(spark):
     assert rows[0]["lang_pred"] == "en"
 
 
-def test_winnowing_incremental_identity(spark):
-    """winnowing_pairs_incremental(new, fps(base)) must equal
-    winnowing_pairs(base ∪ new) restricted to pairs touching a new doc —
-    with the max_fp_df cap computed over the UNION (the rollup-join path),
-    so incrementality never changes the boilerplate prune."""
-    from bag_parser_spark.operators import dedup
-
-    boiler = "shared header words repeated across many docs here now"
-    base_rows = [
-        (i, f"{boiler} base{i} filler{i} tail words go here") for i in range(1, 7)
-    ]
-    new_rows = [
-        (101, f"{boiler} base3 filler3 tail words go here extra"),  # ~dup of 3
-        (102, "completely fresh content with no overlap at all today"),
-        (103, "completely fresh content with no overlap at all today"),  # dup of 102
-    ]
-    base = spark.createDataFrame(base_rows, "doc_id long, text string")
-    new = spark.createDataFrame(new_rows, "doc_id long, text string")
-    for cap in (None, 4):
-        batch = {
-            (r["id_a"], r["id_b"]): r["shared_fps"]
-            for r in dedup.winnowing_pairs(
-                base.unionAll(new), "doc_id", "text",
-                min_shared=1, max_fp_df=cap,
-            ).collect()
-            if r["id_a"] > 100 or r["id_b"] > 100
-        }
-        inc = {
-            (r["id_a"], r["id_b"]): r["shared_fps"]
-            for r in dedup.winnowing_pairs_incremental(
-                new,
-                dedup.winnow_fingerprint_rows(base, "doc_id", "text"),
-                "doc_id", "text", min_shared=1, max_fp_df=cap,
-            ).collect()
-        }
-        assert inc == batch, (cap, inc, batch)
-    # sanity: the capped run still detects both planted relations (the
-    # near-dup of base doc 3 and the exact new-new duplicate) — the cap
-    # prunes only the 6+-doc boilerplate fingerprints
-    assert (102, 103) in inc
-    assert any(101 in p and 3 in p for p in inc), inc
-
-
 def test_calibration_bins_exact_and_clamped(spark):
     """calibration_bins on a hand-built fixture: closed-form conf/rate/
     gap values; out-of-range scores clamp into the edge bins; the
@@ -3072,25 +3020,6 @@ def test_simhash_num_bits_guard():
 
     with _pytest.raises(ValueError, match="num_bits=64 > 60"):
         dedup.simhash_signatures(None, "id", "text", num_bits=64)
-
-
-def test_winnowing_incremental_rejects_hex_string_artifact(spark):
-    """ADVICE r11 #2: a pre-r11 fingerprint artifact stores fps as hex
-    STRINGS; r11+ fps are binary unhex(md5), and string-vs-binary joins
-    silently match nothing. The incremental join must refuse the stale
-    artifact format loudly."""
-    import pytest as _pytest
-
-    from bag_parser_spark.operators import dedup
-
-    new_df = spark.createDataFrame(
-        [(1, "a b c d e f")], "doc_id long, text string"
-    )
-    stale = spark.createDataFrame(
-        [(99, "ab" * 16)], "__id__ long, fp string"
-    )
-    with _pytest.raises(ValueError, match="pre-r11"):
-        dedup.winnowing_pairs_incremental(new_df, stale, "doc_id", "text")
 
 
 def test_bloom_bitmap_broadcast_path_matches_literal(spark):

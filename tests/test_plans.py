@@ -207,8 +207,7 @@ def test_no_rdd_api_and_bounded_driver_actions():
         "operators/dedup.py": {"dup_clusters"},   # CC convergence probe
         "operators/similarity.py": {
             "ivf_topk",                  # centroid pull (k rows)
-            "hard_negatives_blocked",    # big-cell guard (<= |cells| rows)
-            "semantic_dedup_pairs",      # big-cell guard
+            "_block_pairs",              # big-cell guard (<= |cells| rows)
             "embedding_neardup_pairs",   # adaptive-collapse probe (1 row)
         },
         "__main__.py": None,         # CLI driver: report rows + counters
