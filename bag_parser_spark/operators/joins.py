@@ -96,9 +96,12 @@ def conditional_orphan_delete(
     The orphan count is one driver-side action — the same control-flow
     decision the reference makes; both branches stay fully distributed
     (left_anti count, then left_semi keep or unchanged pass-through).
+    left_anti keeps rows whose key is NULL, so the one count covers NULL
+    and dangling keys alike, and left_semi drops both. With no orphans
+    the table passes through without a semi-join.
     """
     n_orphans = df.join(dim, on=on, how="left_anti").count()
-    if n_orphans < threshold:
+    if 0 < n_orphans < threshold:
         return df.join(dim, on=on, how="left_semi")
     return df
 

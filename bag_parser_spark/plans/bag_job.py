@@ -153,10 +153,12 @@ def _import_bag_inner(
     )
 
     if out_dir:
+        # read back with the written schema: parquet schema inference
+        # would run one footer-reading job per table
         for name in list(tables):
             path = os.path.join(out_dir, name)
             tables[name].write.mode("overwrite").parquet(path)
-            tables[name] = spark.read.parquet(path)
+            tables[name] = spark.read.schema(tables[name].schema).parquet(path)
         if extract_dir:
             # every table is now parquet-backed; the extracted XML is
             # no longer referenced by any live plan
@@ -177,7 +179,7 @@ def _import_bag_inner(
     if out_dir:
         path = os.path.join(out_dir, "adressen")
         adressen.write.mode("overwrite").parquet(path)
-        adressen = spark.read.parquet(path)
+        adressen = spark.read.schema(adressen.schema).parquet(path)
     tables["adressen"] = adressen
     return tables
 

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from bag_parser_spark.config import DEFAULT_CONFIG, EngineConfig
 from bag_parser_spark.operators.dedup import last_write_wins
-from bag_parser_spark.operators.joins import anti_join
+from bag_parser_spark.operators.joins import conditional_orphan_delete
 
 ADRESSEN_COLUMNS = [
     "nummer_id",
@@ -170,22 +170,13 @@ def apply_meerdere_panden(
     out = adressen.join(
         last, adressen["nummer_id"] == last["__mp_nummer_id__"], "left"
     )
-    return (
-        out.withColumn(
-            "bouwjaar",
-            F.when(F.col("__mp_matched__"), F.col("__mp_bouwjaar__")).otherwise(
-                F.col("bouwjaar")
-            ),
+    return out.withColumns({
+        c: F.when(F.col("__mp_matched__"), F.col(f"__mp_{c}__")).otherwise(
+            F.col(c)
         )
-        .withColumn(
-            "geometry",
-            F.when(F.col("__mp_matched__"), F.col("__mp_geometry__")).otherwise(
-                F.col("geometry")
-            ),
-        )
-        .drop("__mp_nummer_id__", "__mp_bouwjaar__", "__mp_geometry__",
-              "__mp_matched__")
-    )
+        for c in ("bouwjaar", "geometry")
+    }).drop("__mp_nummer_id__", "__mp_bouwjaar__", "__mp_geometry__",
+            "__mp_matched__")
 
 
 def apply_plaats_overlay(
@@ -216,11 +207,10 @@ def apply_plaats_overlay(
         "geometry": F.col("__pl_geometry__"),
         "object_type": F.lit(object_type),
     }
-    for name, expr in overwrites.items():
-        out = out.withColumn(
-            name,
-            F.when(F.col("__pl_matched__"), expr).otherwise(F.col(name)),
-        )
+    out = out.withColumns({
+        name: F.when(F.col("__pl_matched__"), expr).otherwise(F.col(name))
+        for name, expr in overwrites.items()
+    })
     return out.drop(
         "__pl_nummer_id__", "__pl_rd_x__", "__pl_rd_y__", "__pl_lat__",
         "__pl_lon__", "__pl_geometry__", "__pl_matched__"
@@ -293,19 +283,16 @@ def apply_nevenadressen(
     out = adressen.join(
         overlay, adressen["nummer_id"] == overlay["__neven_id__"], "left"
     )
-    out = out.withColumn(
-        "hoofd_nummer_id",
-        F.when(F.col("__neven_id__").isNotNull(), F.col("__hoofd_id__")).otherwise(
+    is_neven = F.col("__neven_id__").isNotNull()
+    out = out.withColumns({
+        "hoofd_nummer_id": F.when(is_neven, F.col("__hoofd_id__")).otherwise(
             F.col("hoofd_nummer_id")
         ),
-    )
-    for c in NEVEN_INHERITED:
-        out = out.withColumn(
-            c,
-            F.when(F.col("__neven_id__").isNotNull(), F.col(f"__h_{c}__")).otherwise(
-                F.col(c)
-            ),
-        )
+        **{
+            c: F.when(is_neven, F.col(f"__h_{c}__")).otherwise(F.col(c))
+            for c in NEVEN_INHERITED
+        },
+    })
     return out.drop(
         "__neven_id__", "__hoofd_id__",
         *[f"__h_{c}__" for c in NEVEN_INHERITED],
@@ -319,40 +306,25 @@ def clean_adressen(
 ) -> DataFrame:
     """Pass 7 (P11 + P12): dummy-value nulling (bouwjaar 1005 / > 2040,
     oppervlakte 999999 / 1 — reference database_sqlite.py:542-601) and the
-    conditional orphan delete (only when count < threshold — reference
-    database_sqlite.py:604-612; the count is the one driver-side action in
-    the build)."""
-    out = (
-        adressen.withColumn(
-            "bouwjaar",
-            F.when(
-                (F.col("bouwjaar") == 1005) | (F.col("bouwjaar") > 2040),
-                F.lit(None),
-            ).otherwise(F.col("bouwjaar")),
-        )
-        .withColumn(
-            "oppervlakte",
-            F.when(
-                F.col("oppervlakte").isin(999999.0, 1.0), F.lit(None)
-            ).otherwise(F.col("oppervlakte")),
-        )
-    )
-    orphans = anti_join(
-        out.filter(F.col("openbare_ruimte_id").isNotNull()),
-        openbare_ruimten.select(F.col("id").alias("__or_id__")),
+    conditional orphan delete (only when 0 < count < threshold — reference
+    database_sqlite.py:604-612). An orphan has a NULL or dangling
+    openbare_ruimte_id; one left_anti count against the broadcast ids
+    counts both kinds, and is the one driver-side action in the build."""
+    out = adressen.withColumns({
+        "bouwjaar": F.when(
+            (F.col("bouwjaar") == 1005) | (F.col("bouwjaar") > 2040),
+            F.lit(None),
+        ).otherwise(F.col("bouwjaar")),
+        "oppervlakte": F.when(
+            F.col("oppervlakte").isin(999999.0, 1.0), F.lit(None)
+        ).otherwise(F.col("oppervlakte")),
+    })
+    return conditional_orphan_delete(
+        out,
+        F.broadcast(openbare_ruimten.select(F.col("id").alias("__or_id__"))),
         on=F.col("openbare_ruimte_id") == F.col("__or_id__"),
-    ).select("nummer_id")
-    n_orphans = orphans.count() + out.filter(
-        F.col("openbare_ruimte_id").isNull()
-    ).count()
-    if 0 < n_orphans < cfg.delete_addresses_without_public_spaces_threshold:
-        valid_or = openbare_ruimten.select(F.col("id").alias("__or_id__"))
-        out = out.join(
-            F.broadcast(valid_or),
-            out["openbare_ruimte_id"] == F.col("__or_id__"),
-            "left_semi",
-        )
-    return out
+        threshold=cfg.delete_addresses_without_public_spaces_threshold,
+    )
 
 
 def build_adressen(

@@ -1,11 +1,13 @@
 """BAG integrity validation battery (SURVEY §3.3 / §5).
 
 The reference runs ~20 sequential scalar SQL checks (reference
-database_sqlite.py:621-758). Here the per-table scalar checks are FUSED
-into one conditional-aggregation job per table (A2 — one scan instead of
-~10), anti-join counts run as two tiny joins, and the result is a tidy
-report DataFrame (check, value, threshold, passed) plus a boolean verdict —
-the same four check families:
+database_sqlite.py:621-758). Here they run as five actions: one fused
+conditional aggregation over adressen (A2 — one scan instead of ~10; it
+also carries the openbare-ruimte check through a broadcast left join and
+the sentinel-address lookup), one left_anti count per remaining
+referential check, the UTF-8 sentinel lookup, and one job for the four
+table sizes. The result is a tidy report DataFrame (check, value, passed)
+plus a boolean verdict — the same four check families:
 
   1. referential integrity (anti-joins)
   2. completeness thresholds
@@ -16,6 +18,7 @@ the same four check families:
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,13 +49,23 @@ def validate_bag(
     results: list[CheckResult] = []
 
     # --- fused scalar battery over adressen: ONE scan (A2) ---
-    row = adressen.agg(
+    # the left join against the DISTINCT openbare-ruimte ids keeps one row
+    # per address, so __o_id__ is NULL exactly for the orphans (NULL or
+    # dangling openbare_ruimte_id) and every other aggregate is unchanged
+    or_ids = openbare_ruimten.select(F.col("id").alias("__o_id__")).distinct()
+    pc, hn, expected_wpl = cfg.sentinel_address
+    is_sentinel = (F.col("postcode") == pc) & (F.col("huisnummer") == hn)
+    row = adressen.join(
+        F.broadcast(or_ids), F.col("openbare_ruimte_id") == F.col("__o_id__"),
+        "left",
+    ).agg(
         F.count(F.lit(1)).alias("n_adressen"),
         F.count(F.when(F.col("pand_id").isNotNull(), 1)).alias("n_pand"),
         F.count(F.when(F.col("object_type") == "ligplaats", 1)).alias("n_lig"),
         F.count(F.when(F.col("object_type") == "standplaats", 1)).alias("n_sta"),
         F.count(F.when(F.col("woonplaats_id").isNull(), 1)).alias("n_no_wpl"),
         F.count(F.when(F.col("gemeente_id").isNull(), 1)).alias("n_no_gem"),
+        F.count(F.when(F.col("__o_id__").isNull(), 1)).alias("n_no_or"),
         F.count(
             F.when(
                 F.col("latitude").isNull() & F.col("pand_id").isNotNull(), 1
@@ -74,6 +87,11 @@ def validate_bag(
         ).alias("n_sta_no_loc"),
         F.max("nummer_begindatum_geldigheid").alias("max_nummer_begin"),
         F.max("pand_begindatum_geldigheid").alias("max_pand_begin"),
+        # the sentinel's woonplaats, NULL struct when no address matches;
+        # the lowest nummer_id wins if several do
+        F.min_by(
+            F.struct("woonplaats_id"), F.when(is_sentinel, F.col("nummer_id"))
+        ).alias("sentinel"),
     ).collect()[0]
 
     # --- referential integrity: anti-join counts (J7) ---
@@ -82,22 +100,13 @@ def validate_bag(
         adressen.select("gemeente_id").distinct(),
         on=gemeenten["id"] == F.col("gemeente_id"),
     ).count()
-    wpl_without_gem = (
-        woonplaatsen.filter(F.col("gemeente_id").isNull()).count()
-        + anti_join(
-            woonplaatsen.filter(F.col("gemeente_id").isNotNull()),
-            gemeenten.select(F.col("id").alias("__g_id__")),
-            on=F.col("gemeente_id") == F.col("__g_id__"),
-        ).count()
-    )
-    adres_without_or = (
-        adressen.filter(F.col("openbare_ruimte_id").isNull()).count()
-        + anti_join(
-            adressen.filter(F.col("openbare_ruimte_id").isNotNull()),
-            openbare_ruimten.select(F.col("id").alias("__o_id__")),
-            on=F.col("openbare_ruimte_id") == F.col("__o_id__"),
-        ).count()
-    )
+    # left_anti keeps NULL gemeente_id rows: one count covers both kinds
+    wpl_without_gem = anti_join(
+        woonplaatsen,
+        gemeenten.select(F.col("id").alias("__g_id__")),
+        on=F.col("gemeente_id") == F.col("__g_id__"),
+    ).count()
+    adres_without_or = row["n_no_or"]
 
     results.append(CheckResult("gemeenten_zonder_adressen", gem_without_adres,
                                gem_without_adres == 0))
@@ -118,18 +127,10 @@ def validate_bag(
         CheckResult("gemeentenamen_utf8",
                     utf8_rows[0]["naam"] if utf8_rows else None, utf8_ok)
     )
-    pc, hn, expected_wpl = cfg.sentinel_address
-    wpl_rows = (
-        adressen.filter(
-            (F.col("postcode") == pc) & (F.col("huisnummer") == hn)
-        )
-        .select("woonplaats_id")
-        .collect()
-    )
-    wpl_ok = bool(wpl_rows) and wpl_rows[0]["woonplaats_id"] == expected_wpl
+    sentinel_wpl = row["sentinel"]["woonplaats_id"] if row["sentinel"] else None
     results.append(
-        CheckResult("nummer_woonplaats_override",
-                    wpl_rows[0]["woonplaats_id"] if wpl_rows else None, wpl_ok)
+        CheckResult("nummer_woonplaats_override", sentinel_wpl,
+                    sentinel_wpl == expected_wpl)
     )
 
     # --- null-location checks ---
@@ -141,10 +142,14 @@ def validate_bag(
                                row["n_sta_no_loc"], row["n_sta_no_loc"] == 0))
 
     # --- completeness thresholds ---
-    n_or = openbare_ruimten.count()
-    n_wpl = woonplaatsen.count()
-    n_gem = gemeenten.count()
-    n_prov = provincies.count()
+    # the four table sizes as one job over the tagged union
+    sized = [openbare_ruimten, woonplaatsen, gemeenten, provincies]
+    tagged = reduce(lambda a, b: a.unionByName(b), [
+        df.select(F.lit(k).alias("__t__")) for k, df in enumerate(sized)
+    ])
+    n_or, n_wpl, n_gem, n_prov = tagged.agg(*[
+        F.count(F.when(F.col("__t__") == k, 1)) for k in range(len(sized))
+    ]).collect()[0]
     results += [
         CheckResult("aantal_adressen", row["n_adressen"],
                     row["n_adressen"] >= cfg.min_adressen),

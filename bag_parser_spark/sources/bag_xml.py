@@ -31,7 +31,7 @@ from collections.abc import Iterator
 from xml.etree import ElementTree
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -560,7 +560,11 @@ def finalize_entity(
 ) -> DataFrame:
     """Post-parse DataFrame pipeline: P3-P5 active filter → S7 upsert →
     coordinate derivation → geometry convert/blank → typed projection.
-    All Column expressions — nothing returns to Python."""
+    All Column expressions — nothing returns to Python. The derivations
+    are at most two projections: rd_x/rd_y first, then everything else,
+    with latitude/longitude reading the rd_x/rd_y columns so the position
+    parse is planned once per coordinate, not inlined into every
+    polynomial term."""
     from datetime import date
 
     entity = ENTITIES[entity_name]
@@ -585,6 +589,7 @@ def finalize_entity(
             keys=[entity.upsert_key],
             order_by=[F.col("__file__"), F.col("__ordinal__")],
         )
+    derived: dict[str, Column] = {}
     if entity.coordinates_field:
         pos = (
             G.first_pos_of_geometry(F.col("geometry"))
@@ -593,34 +598,27 @@ def finalize_entity(
         )
         pos = F.when(F.coalesce(pos, F.lit("")) != "", pos)
         x, y = scalars.pos_to_rd(pos)
-        df = (
-            df.withColumn("rd_x", x)
-            .withColumn("rd_y", y)
-            .withColumn("latitude", RD.rd_to_wgs84_lat(x, y))
-            .withColumn("longitude", RD.rd_to_wgs84_lon(x, y))
-        )
+        df = df.withColumns({"rd_x": x, "rd_y": y})
+        derived["latitude"] = RD.rd_to_wgs84_lat(F.col("rd_x"), F.col("rd_y"))
+        derived["longitude"] = RD.rd_to_wgs84_lon(F.col("rd_x"), F.col("rd_y"))
     if entity.has_geometry:
-        df = df.withColumn(
-            "geometry",
+        derived["geometry"] = (
             G.geometry_to_wgs_geojson(F.col("geometry"), entity.has_3d_geometry)
             if cfg.parse_geometries
-            else F.lit(""),
+            else F.lit("")
         )
     if entity_name == "OpenbareRuimte":
         # P6: naam chosen short/long at save time (database_sqlite.py:94-97)
-        df = df.withColumn(
-            "naam",
-            scalars.choose_name(
-                F.col("lange_naam"),
-                F.col("verkorte_naam"),
-                cfg.use_short_street_names,
-            ),
+        derived["naam"] = scalars.choose_name(
+            F.col("lange_naam"),
+            F.col("verkorte_naam"),
+            cfg.use_short_street_names,
         )
     for c in entity.int_fields:
-        df = df.withColumn(c, F.col(c).cast("int"))
+        derived[c] = F.col(c).cast("int")
     for c in entity.double_fields:
-        df = df.withColumn(c, F.col(c).cast("double"))
-    return df.drop("__file__", "__ordinal__", "pos")
+        derived[c] = F.col(c).cast("double")
+    return df.withColumns(derived).drop("__file__", "__ordinal__", "pos")
 
 
 def read_bag_entity(

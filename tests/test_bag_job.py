@@ -143,6 +143,22 @@ def test_import_bag_end_to_end(spark, tmp_path):
     assert report.count() >= 15
 
 
+def test_import_bag_reads_tables_back_with_parquet_schema(spark, tmp_path):
+    """import_bag reads each persisted table back with the schema it wrote
+    instead of inferring it; every returned table must still carry the
+    schema the parquet files themselves report."""
+    _write_inputs(tmp_path)
+    out = tmp_path / "out"
+    tables = import_bag(
+        spark, str(tmp_path), str(tmp_path / "gemeenten.csv"),
+        out_dir=str(out),
+        cfg=EngineConfig(active_only=True, snapshot_date=SNAPSHOT),
+    )
+    assert len(tables) == 11
+    for name, df in tables.items():
+        assert df.schema == spark.read.parquet(str(out / name)).schema, name
+
+
 def test_csv_header_validation(spark, tmp_path):
     bad = tmp_path / "bad.csv"
     bad.write_text("foo,bar\n1,2\n", encoding="utf-8")

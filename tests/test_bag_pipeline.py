@@ -171,3 +171,126 @@ def test_coordinates_at_base_point(bag):
     r = _row(bag["adressen"], nummer_id="N00001000")
     assert abs(r["latitude"] - 52.15517440) < 1e-9
     assert abs(r["longitude"] - 5.38720621) < 1e-9
+
+
+def _with_orphans(adressen):
+    """Two adressen with a NULL and one with a dangling openbare_ruimte_id,
+    replacing their originals."""
+    null_ids, dangling_id = ["N00001000", "N00002000"], "N00003000"
+    return (
+        adressen.filter(~F.col("nummer_id").isin(*null_ids, dangling_id))
+        .unionByName(
+            adressen.filter(F.col("nummer_id").isin(*null_ids)).withColumn(
+                "openbare_ruimte_id", F.lit(None).cast("string")
+            )
+        )
+        .unionByName(
+            adressen.filter(F.col("nummer_id") == dangling_id).withColumn(
+                "openbare_ruimte_id", F.lit("OR-DANGLING")
+            )
+        )
+    )
+
+
+def test_orphan_delete_counts_null_and_dangling_in_one_pass(bag, monkeypatch):
+    from dataclasses import replace
+
+    clean = bag["adressen"]
+    n = clean.count()
+    dirty = _with_orphans(clean)
+    orphan_ids = ["N00001000", "N00002000", "N00003000"]
+
+    counts = []
+    frame = type(dirty)  # the concrete DataFrame class (classic or Connect)
+    real_count = frame.count
+    monkeypatch.setattr(
+        frame, "count", lambda df: counts.append(1) or real_count(df)
+    )
+
+    def clean_at(threshold):
+        counts.clear()
+        cfg = replace(
+            FIXTURE_CONFIG,
+            delete_addresses_without_public_spaces_threshold=threshold,
+        )
+        out = P.clean_adressen(dirty, bag["openbare_ruimten"], cfg)
+        assert len(counts) == 1  # one action decides the delete
+        return out
+
+    # the count is exactly 3: deleted below a threshold of 4, kept at 3
+    below = clean_at(4)
+    assert below.count() == n - 3
+    assert below.filter(F.col("nummer_id").isin(orphan_ids)).count() == 0
+    assert clean_at(3).count() == n
+    assert clean_at(2).count() == n
+
+    # no orphans: the table passes through without adding a semi-join
+    def semi_joins(df):
+        return df._jdf.queryExecution().optimizedPlan().toString().count(
+            "LeftSemi"
+        )
+
+    again = P.clean_adressen(clean, bag["openbare_ruimten"], FIXTURE_CONFIG)
+    assert semi_joins(again) == semi_joins(clean)
+
+
+# validate_bag's (check, value, passed) rows on the broken fixture below, as
+# returned by the unfused battery (one action per check) it replaced
+BROKEN_REPORT = [
+    ("gemeenten_zonder_adressen", "0", True),
+    ("woonplaatsen_zonder_gemeente", "2", False),
+    ("adressen_zonder_openbare_ruimte", "3", False),
+    ("adressen_zonder_woonplaats", "0", True),
+    ("adressen_zonder_gemeente", "0", True),
+    ("gemeentenamen_utf8", "Súdwest-Fryslân", True),
+    ("nummer_woonplaats_override", "None", False),
+    ("panden_zonder_locatie", "0", True),
+    ("ligplaatsen_zonder_locatie", "0", True),
+    ("standplaatsen_zonder_locatie", "0", True),
+    ("aantal_adressen", "949", True),
+    ("aantal_adressen_met_pand", "937", True),
+    ("aantal_ligplaatsen", "5", True),
+    ("aantal_standplaatsen", "6", True),
+    ("aantal_openbare_ruimten", "311", True),
+    ("aantal_woonplaatsen", "312", True),
+    ("aantal_gemeenten", "310", True),
+    ("aantal_provincies", "12", True),
+    ("laatste_nummer_begindatum", "2011-01-01", True),
+    ("laatste_pand_begindatum", "2012-01-01", True),
+]
+
+
+def test_validation_report_on_broken_fixture(spark, bag, monkeypatch):
+    """Sentinel address missing, one openbare-ruimte id twice (it must not
+    duplicate that id's adressen in the fused aggregate), a woonplaats with
+    NULL and one with a dangling gemeente_id, and NULL/dangling
+    openbare_ruimte_id adressen: the fused battery reports what the
+    one-action-per-check battery did, in at most five actions."""
+    a = _with_orphans(bag["adressen"]).filter(
+        ~((F.col("postcode") == "1181BN") & (F.col("huisnummer") == 1))
+    )
+    orr = bag["openbare_ruimten"]
+    orr = orr.unionByName(orr.filter(F.col("id") == "OR0000000004"))
+    wpl = bag["woonplaatsen_enriched"]
+    wpl = wpl.unionByName(spark.createDataFrame(
+        [(90001, "Nergensdorp", "", "Woonplaats aangewezen", "2010-01-01", "",
+          None),
+         (90002, "Spookdorp", "", "Woonplaats aangewezen", "2010-01-01", "",
+          8888)],
+        wpl.schema,
+    ))
+
+    actions = []
+    frame = type(a)
+    for name in ("count", "collect"):
+        real = getattr(frame, name)
+        monkeypatch.setattr(
+            frame, name,
+            lambda df, _real=real: actions.append(1) or _real(df),
+        )
+    report, ok = validate_bag(a, bag["gemeenten"], wpl, orr, bag["provincies"],
+                              FIXTURE_CONFIG, spark=spark)
+    assert 0 < len(actions) <= 5
+    monkeypatch.undo()
+    assert not ok
+    assert [tuple(r) for r in report.collect()] == BROKEN_REPORT

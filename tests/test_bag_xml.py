@@ -540,3 +540,16 @@ def test_auto_backend_routing_guards(tmp_path):
     assert not delivery_has_zips(str(tmp_path / "delivery"))
     (nested / "9999MUT.zip").write_bytes(b"PK\x03\x04")
     assert delivery_has_zips(str(tmp_path / "delivery"))
+
+
+def test_finalize_entity_parses_position_once_per_coordinate(spark):
+    """latitude/longitude read the rd_x/rd_y columns, so the optimized plan
+    evaluates the position split once for rd_x and once for rd_y instead
+    of inlining it into every polynomial term."""
+    from bag_parser_spark.sources.bag_schemas import ENTITIES
+    from bag_parser_spark.sources.bag_xml import _raw_schema, finalize_entity
+
+    raw = spark.createDataFrame([], _raw_schema(ENTITIES["Verblijfsobject"]))
+    df = finalize_entity(raw, "Verblijfsobject", CFG)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert 0 < plan.count("split(") <= 2

@@ -200,7 +200,8 @@ def test_no_rdd_api_and_bounded_driver_actions():
     # next collect() added anywhere in it)
     allowed_actions: dict[str, set[str] | None] = {
         "plans/validate.py": None,   # invariant battery: count/collect
-        "plans/bag_pipeline.py": None,  # orphan-count report
+        "plans/bag_pipeline.py": set(),  # the orphan count lives in
+                                  # joins.conditional_orphan_delete
         "operators/joins.py": {"conditional_orphan_delete"},  # the
                                   # documented 1-scalar orphan count
                                   # gating delete vs no-op
