@@ -154,7 +154,6 @@ def cmd_import(args) -> int:
         use_short_street_names=args.short_street_names,
         parse_geometries=args.geometries,
         snapshot_date=args.snapshot_date,
-        xml_backend=args.xml_backend,
     )
     spark = _get_spark(args, "bag-import")
     _log(f"start: parse BAG XML {args.bag!r} to parquet {args.out!r}")
@@ -403,7 +402,9 @@ def build_parser() -> argparse.ArgumentParser:
 
     imp = sub.add_parser("import", help="parse BAG XML to parquet tables")
     imp.add_argument("--bag", required=True,
-                     help="directory of LVBAG XML files or per-entity zips")
+                     help="LVBAG delivery: a directory of XML files or "
+                     "zips, or the delivery zip (zips are extracted under "
+                     "--out, then removed)")
     imp.add_argument("--gemeenten", required=True,
                      help="gemeenten CSV (reference input/gemeenten.csv)")
     imp.add_argument("--out", required=True, help="output parquet directory")
@@ -417,14 +418,6 @@ def build_parser() -> argparse.ArgumentParser:
     imp.add_argument("--geometries", action="store_true",
                      help="parse + convert geometries (reference "
                      "parse_geometries)")
-    imp.add_argument("--xml-backend", default="auto",
-                     choices=("auto", "iterparse", "native"),
-                     help="XML scan: 'auto' (default: JVM-native parse "
-                     "for plain layouts, iterparse for zipped "
-                     "deliveries), 'iterparse' (reads zips in-stream) "
-                     "or 'native' (JVM-side parse; a zipped delivery is "
-                     "transparently extracted to plain .xml under --out "
-                     "first, then removed)")
     _add_spark_args(imp)
     imp.set_defaults(fn=cmd_import)
 

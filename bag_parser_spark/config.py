@@ -3,7 +3,9 @@
 Reference: config.py:24-48 (active_only, use_short_street_names,
 parse_geometries, delete_no_longer_needed_bag_tables, orphan threshold).
 These become declarative options that shape the generated DataFrame plan
-instead of imperative branches.
+instead of imperative branches. The XML scan itself has no option: a
+zipped delivery is extracted and every file is parsed by Spark's JVM XML
+source (sources/bag_xml.py).
 """
 
 from __future__ import annotations
@@ -25,18 +27,6 @@ class EngineConfig:
     # snapshot date for temporal validity (reference utils.py:168-169 uses
     # datetime.today(); injectable here for deterministic tests)
     snapshot_date: str | None = None
-    # XML scan backend: "auto" (default, r8 — the JVM-native parse for
-    # plain .xml layouts, measured ~6% faster end-to-end and
-    # parity-tested per entity, falling back to iterparse when the
-    # delivery still contains zips), "iterparse" (binaryFile +
-    # mapInPandas — handles zip-in-zip deliveries and arbitrarily
-    # nested tags) or "native" (Spark 4 built-in `format("xml")` —
-    # parse stays JVM-side, no Python workers; requires pre-extracted
-    # plain .xml files with the entity's tags as direct children of the
-    # object element, the layout the reference's own extract step
-    # produces). See sources/bag_xml.py:read_bag_entity_raw_native for
-    # the exact contract.
-    xml_backend: str = "auto"
     # validation thresholds (reference database_sqlite.py:716-754), scaled
     # per fixture; production values are the defaults
     min_adressen: int = 9_000_000

@@ -2,7 +2,9 @@
 as one Spark application.
 
 Reference stages → Spark mapping:
-  unzip + per-entity XML parse (×8, process pool)  → 8 lazy source DAGs
+  unzip to a temp dir                              → extract_bag_delivery
+                                                     (driver, once)
+  per-entity XML parse (×8, process pool)          → 8 lazy JVM XML scans
   DDL + per-row REPLACE inside one transaction     → dedup + atomic parquet
                                                      job commit per entity
   woonplaats enrichment, adressen build, cleaning  → one composed lineage
@@ -13,7 +15,8 @@ Reference stages → Spark mapping:
                                                      _bag_tables)
 
 Entity XML paths: ``{xml_root}/{entity_file_code}*`` mirroring the
-reference's zip-member naming (9999WPL…, reference bag_parser.py:401-407).
+reference's zip-member naming (9999WPL…, reference bag_parser.py:401-407);
+the extraction keeps those names.
 
 Every stage is lazy until a sink forces it; per-entity writes run
 independently (no false sequencing — the reference's strict stage order
@@ -22,7 +25,10 @@ dissolves into lineage dependencies).
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -30,7 +36,11 @@ from bag_parser_spark.config import DEFAULT_CONFIG, EngineConfig
 from bag_parser_spark.plans import bag_pipeline as P
 from bag_parser_spark.plans.validate import validate_bag
 from bag_parser_spark.sources.bag_schemas import ENTITIES
-from bag_parser_spark.sources.bag_xml import read_bag_entity
+from bag_parser_spark.sources.bag_xml import (
+    delivery_has_zips,
+    extract_bag_delivery,
+    read_bag_entity,
+)
 from bag_parser_spark.sources.gemeenten_csv import (
     gemeenten_table,
     provincies_table,
@@ -61,17 +71,13 @@ ENTITY_TABLE_NAMES = {
 
 
 def entity_xml_path(xml_root: str, entity_name: str) -> str:
-    """Per-entity scan path. Preferred layout: per-entity files/zips named
-    by file code (9999WPL*, the reference's extracted-temp layout). When
-    nothing matches — the user pointed --bag at the raw delivery (a
-    directory holding lvbag-extract-nl.zip, or the zip itself) — fall back
-    to scanning the root; the per-entity member-prefix filter inside the
-    zip recursion (sources/bag_xml.py:_iter_xml_payloads) then selects
-    this entity's members, so no pre-extraction step is ever required."""
-    import glob as _glob
-
+    """Per-entity scan path: the files named by the entity's file code
+    (9999WPL*, the reference's extracted-temp layout, which
+    ``extract_bag_delivery`` keeps). When nothing matches, the root is
+    scanned whole; the scan's row tag then selects this entity's
+    records."""
     pattern = os.path.join(xml_root, f"{ENTITIES[entity_name].file_code}*")
-    if os.path.isfile(xml_root) or not _glob.glob(pattern):
+    if os.path.isfile(xml_root) or not glob.glob(pattern):
         return xml_root
     return pattern
 
@@ -86,29 +92,23 @@ def import_bag(
     """Run the full import; returns all tables (adressen included). When
     ``out_dir`` is set, each table is persisted as parquet (atomic job
     commit — the transaction equivalent) and read back, cutting lineage
-    exactly where the reference commits its per-entity transaction."""
-    from bag_parser_spark.sources.bag_xml import (
-        delivery_has_zips,
-        extract_bag_delivery,
-    )
+    exactly where the reference commits its per-entity transaction.
 
-    # The JVM-native XML source reads files, not zip members: flatten a
-    # zipped delivery to plain .xml first, transparently (the reference
-    # performs the same extraction to a temp dir, import_bag.py:31-37).
-    # The extraction lives under out_dir when given (removed after the
-    # persist cut re-reads every table from parquet) else a mkdtemp that
-    # must outlive the returned lazy DataFrames.
+    A zipped delivery (zips at any depth under ``xml_root``) is first
+    flattened to plain .xml, as the reference does to a temp dir
+    (import_bag.py:31-37). The extraction lives under ``out_dir`` when
+    given (removed after the persist cut re-reads every table from
+    parquet), else in a mkdtemp that must outlive the returned lazy
+    DataFrames. Plain layouts are read in place."""
     extract_dir = None
-    if cfg.xml_backend == "native" and delivery_has_zips(xml_root):
-        import tempfile
-
-        extract_dir = (
-            os.path.join(out_dir, "_native_xml_extract")
-            if out_dir
-            else tempfile.mkdtemp(prefix="bag_native_extract_")
-        )
-        xml_root = extract_bag_delivery(xml_root, extract_dir)
     try:
+        if delivery_has_zips(xml_root):
+            extract_dir = (
+                os.path.join(out_dir, "_xml_extract")
+                if out_dir
+                else tempfile.mkdtemp(prefix="bag_xml_extract_")
+            )
+            xml_root = extract_bag_delivery(xml_root, extract_dir)
         return _import_bag_inner(
             spark, xml_root, gemeenten_csv, out_dir, cfg, extract_dir
         )
@@ -119,8 +119,6 @@ def import_bag(
         # the mkdtemp case (out_dir None) leaks a full extracted XML copy
         # per crash otherwise — no live plan references it once we raise
         if extract_dir:
-            import shutil
-
             shutil.rmtree(extract_dir, ignore_errors=True)
         raise
 
@@ -140,8 +138,7 @@ def _import_bag_inner(
     }
     for entity in XML_ENTITIES:
         tables[ENTITY_TABLE_NAMES[entity]] = read_bag_entity(
-            spark, entity_xml_path(xml_root, entity), entity, cfg,
-            member_prefix=ENTITIES[entity].file_code,
+            spark, entity_xml_path(xml_root, entity), entity, cfg
         )
 
     # enrich BEFORE the persist cut so the on-disk woonplaatsen already
@@ -162,8 +159,6 @@ def _import_bag_inner(
         if extract_dir:
             # every table is now parquet-backed; the extracted XML is
             # no longer referenced by any live plan
-            import shutil
-
             shutil.rmtree(extract_dir, ignore_errors=True)
     adressen = P.build_adressen(
         tables["nummers"],

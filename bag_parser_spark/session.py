@@ -51,11 +51,8 @@ def get_spark(
         # and OOMed 16 GB drivers). 1 MiB keeps plans debuggable while
         # making the cost invisible; .explain() output is unaffected for
         # every plan a human actually reads.
-        .config(
-            "spark.sql.maxPlanStringLength",
-            os.environ.get("SPARK_GRAFT_MAX_PLAN_STR", str(1 << 20)),
-        )
-        .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
+        .config("spark.sql.maxPlanStringLength", str(1 << 20))
+        .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # r11 optimization-round knob (guide §1.2 step 3), scale-neutral:
         # the default 100 compiled-class codegen-cache entries thrash on

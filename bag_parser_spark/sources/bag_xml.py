@@ -3,20 +3,19 @@
 The reference fans one Python process per XML file and streams iterparse
 events (reference bag/bag_parser.py:73-120, 441-453). Spark-first shape:
 
-    binaryFile scan (one row per XML file, splittable listing)
-      → repartition over files
-      → mapInPandas iterparse (Arrow-batched; executor-side, no driver IO)
+    zipped delivery → extract_bag_delivery (driver, streamed to disk, once)
+      → format("xml") scan of the plain .xml files (JVM-side parse; no
+        Python workers, no Arrow transfer)
       → DataFrame transforms: active filter (P3-P5), last-write-wins upsert
         (S7/W1, explicit (file, ordinal) order), coordinate derivation
         (P7/P8 + F6 as Column arithmetic — the reference does this per-row
         in Python), geometry convert-or-blank (F8/P10), typed projection.
 
-At 100 TB the heavy work (string parsing) is embarrassingly parallel per
-file; everything after the parse is JVM-side. The upsert is the only
-shuffle (on id). Zip handling (S1): pre-extract outside Spark or feed
-``spark.read.format('binaryFile')`` over extracted XML — per-file zips can
-also be decompressed inside the same mapInPandas pass (zipfile on the
-binary payload) without changing the dataflow.
+Zip handling (S1) is the reference's own step: it extracts the delivery
+to a temp dir before parsing (reference import_bag.py:31-37), and so does
+``plans/bag_job.import_bag``. The scan lists local files only; a remote
+delivery (s3://, hdfs://) must be copied and extracted locally first. The
+upsert is the only shuffle (on id).
 
 Determinism upgrade over the reference: REPLACE INTO order there is
 as_completed() future order (nondeterministic across processes); here the
@@ -25,12 +24,13 @@ upsert orders by (file path, row ordinal) — stable under retries.
 
 from __future__ import annotations
 
-import io
+import glob
+import os
+import shutil
+import tempfile
 import zipfile
-from collections.abc import Iterator
-from xml.etree import ElementTree
+from xml.parsers import expat
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -55,169 +55,12 @@ def _raw_schema(entity: EntityConfig) -> T.StructType:
     )
 
 
-def parse_xml_records(
-    payload: bytes, entity: EntityConfig, geometry_field: str = "geometry"
-) -> Iterator[dict]:
-    """Stream one XML document's object elements as flat dicts.
-
-    Implements the reference's accumulation semantics (bag_parser.py:73-103):
-    defaults injected for absent tags (P2), parent-qualified tags resolved
-    first (S3 — the same child tag means different columns under different
-    parents), repeated tags comma-joined (S4), geometry chunks
-    bracket-wrapped at parse time (P9).
-    """
-    record = dict(entity.defaults)
-    stack: list[str] = []
-    for event, elem in ElementTree.iterparse(io.BytesIO(payload), ("start", "end")):
-        if event == "start":
-            stack.append(elem.tag)
-            continue
-        stack.pop()
-        if elem.tag == entity.object_tag:
-            yield record
-            record = dict(entity.defaults)
-            elem.clear()  # release subtree memory (streaming behavior)
-            continue
-        column = None
-        if stack and entity.parent_fields:
-            column = entity.parent_fields.get(stack[-1] + elem.tag)
-        if column is None:
-            column = entity.fields.get(elem.tag)
-        if column is None:
-            continue
-        value = elem.text or ""
-        if column == geometry_field and entity.has_geometry:
-            value = f"[{value}]"
-        prior = record.get(column)
-        record[column] = f"{prior},{value}" if prior else value
-
-
-def _iter_xml_payloads(
-    name: str,
-    payload: bytes,
-    member_prefix: str | None = None,
-    matched: bool = False,
-    from_zip: bool = False,
-) -> Iterator[bytes]:
-    """Yield XML documents from a payload, recursing through zip members —
-    the reference's delivery is two-level (lvbag-extract-nl.zip containing
-    one zip per entity, each holding thousands of numbered XML files;
-    reference bag_parser.py:401-407, import_bag.py:31-37). Members iterate
-    in sorted-name order so the arrival ordinal below is deterministic —
-    the numbered-file order the reference's parser sees.
-
-    ``member_prefix`` is the per-entity member filter (the reference's
-    find_file/find_xml_files by file code, bag_parser.py:404,410): inside
-    an archive that did NOT itself match the prefix (the outer delivery
-    zip), only members whose basename starts with the prefix are taken;
-    once an archive matches (9999WPL….zip), all its XML members belong to
-    the entity and are taken regardless of their names."""
-    import os
-
-    if name.lower().endswith(".zip"):
-        with zipfile.ZipFile(io.BytesIO(payload)) as zf:
-            for member in sorted(zf.namelist()):
-                if not member.lower().endswith((".xml", ".zip")):
-                    continue
-                base = os.path.basename(member)
-                hit = matched or member_prefix is None or base.startswith(
-                    member_prefix
-                )
-                if not hit:
-                    continue
-                yield from _iter_xml_payloads(
-                    member, zf.read(member), member_prefix,
-                    matched or base.startswith(member_prefix or ""),
-                    from_zip=True,
-                )
-    elif from_zip or _looks_like_xml(payload):
-        # Zip members were already filtered to .xml by extension above —
-        # trust them unconditionally (a malformed member should fail
-        # LOUDLY in iterparse, not vanish). Top-level files, however,
-        # reach here unfiltered when entity_xml_path falls back to
-        # scanning the whole --bag directory (raw-delivery layout):
-        # binaryFile loads every sibling — a gemeenten.csv kept next to
-        # the delivery zip, LVBAG checksum/readme files — and feeding
-        # those to iterparse crashes the import with a bare ParseError,
-        # so non-XML-looking top-level payloads are skipped.
-        yield payload
-
-
-def _looks_like_xml(payload: bytes) -> bool:
-    """True when the payload plausibly starts an XML document: optional
-    UTF-8/16/32 BOM, any amount of leading whitespace (scanned, not
-    sliced — a long comment prologue must not defeat the sniff), then
-    '<' — including the UTF-16/32 encodings where '<' is interleaved
-    with NUL bytes."""
-    for b in payload[:4096]:
-        if b in (0xEF, 0xBB, 0xBF, 0xFF, 0xFE, 0x00, 0x20, 0x09, 0x0D, 0x0A):
-            continue  # BOM bytes, NULs (UTF-16/32 padding), whitespace
-        return b == 0x3C  # '<'
-    return False
-
-
-def read_bag_entity_raw(
-    spark: SparkSession,
-    path: str,
-    entity_name: str,
-    member_prefix: str | None = None,
-) -> DataFrame:
-    """binaryFile scan + mapInPandas iterparse → raw all-string DataFrame
-    with (file, ordinal) arrival order attached. ``member_prefix`` filters
-    zip members to this entity's file code when scanning a combined
-    delivery zip (see _iter_xml_payloads)."""
-    import os
-
-    entity = ENTITIES[entity_name]
-    schema = _raw_schema(entity)
-    names = [f.name for f in schema.fields]
-    files = spark.read.format("binaryFile").load(path)
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for fpath, payload in zip(pdf["path"], pdf["content"]):
-                # a top-level file that itself carries the entity code is
-                # fully owned by this entity; an outer delivery zip is not,
-                # so its members go through the prefix filter
-                matched = os.path.basename(fpath).startswith(
-                    member_prefix or ""
-                )
-                # ONE running ordinal across every document in the archive:
-                # a per-document counter would repeat (file, ordinal) pairs
-                # for multi-member zips and make last-write-wins ambiguous
-                ordinal = 0
-                for doc in _iter_xml_payloads(
-                    fpath, bytes(payload), member_prefix, matched
-                ):
-                    for rec in parse_xml_records(doc, entity):
-                        rec["__file__"] = fpath
-                        rec["__ordinal__"] = ordinal
-                        ordinal += 1
-                        rows.append(rec)
-            yield pd.DataFrame(rows, columns=names)
-
-    # Explicit partition count: a bare repartition(col) lets AQE coalesce
-    # by shuffle BYTES, which packs many small files into one task — but
-    # iterparse cost is CPU-bound on XML structure, not proportional to
-    # compressed payload size, so byte-coalescing creates stragglers.
-    # Pinning numPartitions to the session's parallelism keeps one task
-    # per core busy regardless of file-size skew (files still hash by
-    # path, so one file is never split mid-document).
-    n_parts = spark.sparkContext.defaultParallelism
-    return (
-        files.select("path", "content")
-        .repartition(n_parts, F.col("path"))
-        .mapInPandas(parse, schema=schema)
-    )
-
-
 _NS_PREFIX = {
     # literal prefix per namespace URI, as written in Kadaster deliveries.
-    # The native reader matches QUALIFIED NAMES AS WRITTEN (Spark's XML
-    # source is not namespace-aware) — fine for LVBAG, whose deliveries
-    # use these fixed prefixes; the iterparse backend resolves real
-    # namespaces and has no such assumption.
+    # The scan matches QUALIFIED NAMES AS WRITTEN (Spark's XML source is
+    # not namespace-aware) — fine for LVBAG, whose deliveries use these
+    # fixed prefixes; _check_namespace_prefixes rejects files that bind
+    # these URIs otherwise instead of letting them scan as zero rows.
     "{www.kadaster.nl/schemas/lvbag/imbag/objecten/v20200601}": "Objecten",
     "{www.kadaster.nl/schemas/lvbag/imbag/objecten-ref/v20200601}": "Objecten-ref",
     "{www.kadaster.nl/schemas/lvbag/imbag/historie/v20200601}": "Historie",
@@ -242,8 +85,8 @@ def _split_parent_key(key: str) -> tuple[str, str]:
     return key[:i], key[i:]
 
 
-# Known LVBAG wrapper elements whose CHILD the iterparse reader matches
-# at depth (it keys on the child tag alone) but the native reader must
+# Known LVBAG wrapper elements whose CHILD a namespace-aware parser would
+# match at depth (keyed on the child tag alone) but the XML scan must
 # declare structurally: entity → list of (wrapper StructField, target
 # column, extractor(df) -> array<string> of the nested values). These
 # cover the real-delivery VBO layout (PandRef inside maaktDeelUitVan,
@@ -300,11 +143,11 @@ _NATIVE_WRAPPERS = {"Verblijfsobject": _vbo_wrappers}
 
 
 def _native_schema(entity: EntityConfig) -> T.StructType:
-    """Explicit all-string read schema for the native XML source. Every
-    simple field is array<string> (repeated tags arrive as N elements,
-    single tags as 1 — comma-joined afterwards, the iterparse S4 rule);
-    every parent_fields parent is array<struct<child: string>> (S3);
-    plus the entity's known wrapper elements (_NATIVE_WRAPPERS)."""
+    """Explicit all-string read schema for the XML source. Every simple
+    field is array<string> (repeated tags arrive as N elements, single
+    tags as 1 — comma-joined afterwards, the S4 rule); every
+    parent_fields parent is array<struct<child: string>> (S3); plus the
+    entity's known wrapper elements (_NATIVE_WRAPPERS)."""
     fields = [
         T.StructField(_prefixed(qtag), T.ArrayType(T.StringType()))
         for qtag in entity.fields
@@ -335,12 +178,17 @@ def _native_schema(entity: EntityConfig) -> T.StructType:
 
 def extract_bag_delivery(path: str, dest_dir: str) -> str:
     """Flatten a (possibly two-level) zipped BAG delivery into plain
-    ``.xml`` files under ``dest_dir`` — the pre-extraction step the
-    JVM-native backend needs (Spark's XML source reads files, not zip
-    members; the reference performs the same extraction to a temp dir,
-    reference import_bag.py:31-37). ``path`` may be the delivery zip
-    itself, a directory holding it and/or per-entity zips, or a mixed
-    layout with loose ``.xml`` files (copied through).
+    ``.xml`` files under ``dest_dir`` — Spark's XML source reads files,
+    not zip members; the reference performs the same extraction to a temp
+    dir (reference import_bag.py:31-37). ``path`` may be the delivery zip
+    itself, or a directory holding it and/or per-entity zips and loose
+    ``.xml`` files (copied through), at any depth: subdirectories are
+    walked in sorted order. Other files (checksums, a gemeenten.csv next
+    to the zip) are skipped.
+
+    Members stream to disk (``zf.open`` + ``copyfileobj``); an inner
+    per-entity zip is spooled to an unnamed temp file under ``dest_dir``
+    first, so driver memory stays flat however large the archives are.
 
     Naming preserves per-entity selection by file-code glob
     (``entity_xml_path``): a member keeps its basename when it already
@@ -353,16 +201,13 @@ def extract_bag_delivery(path: str, dest_dir: str) -> str:
     beside the fresh files and both match the entity globs (stale rows
     imported silently).
     """
-    import os
-    import shutil
-
     if os.path.isdir(dest_dir):
         shutil.rmtree(dest_dir)
-    os.makedirs(dest_dir, exist_ok=True)
+    os.makedirs(dest_dir)
     codes = tuple(e.file_code for e in ENTITIES.values())
     used: set[str] = set()
 
-    def target_name(member_base: str, archive_stem: str) -> str:
+    def target_path(member_base: str, archive_stem: str) -> str:
         name = (
             member_base
             if member_base.startswith(codes) or not archive_stem
@@ -374,7 +219,7 @@ def extract_bag_delivery(path: str, dest_dir: str) -> str:
             k += 1
             out = f"{stem}_{k}{ext}"
         used.add(out)
-        return out
+        return os.path.join(dest_dir, out)
 
     def extract_zip(zf: zipfile.ZipFile, archive_stem: str) -> int:
         n = 0
@@ -382,24 +227,26 @@ def extract_bag_delivery(path: str, dest_dir: str) -> str:
             base = os.path.basename(member)
             low = member.lower()
             if low.endswith(".zip"):
-                with zipfile.ZipFile(io.BytesIO(zf.read(member))) as inner:
-                    n += extract_zip(inner, os.path.splitext(base)[0])
+                # ZipFile needs a seekable file: spool the inner archive
+                with tempfile.TemporaryFile(dir=dest_dir) as spool:
+                    with zf.open(member) as src:
+                        shutil.copyfileobj(src, spool)
+                    with zipfile.ZipFile(spool) as inner:
+                        n += extract_zip(inner, os.path.splitext(base)[0])
             elif low.endswith(".xml"):
-                out = os.path.join(
-                    dest_dir, target_name(base, archive_stem)
-                )
-                with open(out, "wb") as f:
-                    f.write(zf.read(member))
+                with zf.open(member) as src, open(
+                    target_path(base, archive_stem), "wb"
+                ) as dst:
+                    shutil.copyfileobj(src, dst)
                 n += 1
         return n
 
-    import glob as _glob
-
-    sources = (
-        [path]
-        if os.path.isfile(path)
-        else sorted(_glob.glob(os.path.join(path, "*")))
-    )
+    # listed before anything is extracted: a dest_dir inside ``path`` is
+    # still empty here
+    sources = [path] if os.path.isfile(path) else []
+    for root, dirs, files in os.walk(path):
+        dirs.sort()
+        sources += [os.path.join(root, f) for f in sorted(files)]
     n = 0
     for src in sources:
         low = src.lower()
@@ -407,8 +254,7 @@ def extract_bag_delivery(path: str, dest_dir: str) -> str:
             with zipfile.ZipFile(src) as zf:
                 n += extract_zip(zf, "")
         elif low.endswith(".xml"):
-            base = os.path.basename(src)
-            shutil.copyfile(src, os.path.join(dest_dir, target_name(base, "")))
+            shutil.copyfile(src, target_path(os.path.basename(src), ""))
             n += 1
     if n == 0:
         raise FileNotFoundError(
@@ -418,89 +264,109 @@ def extract_bag_delivery(path: str, dest_dir: str) -> str:
 
 
 def delivery_has_zips(path: str) -> bool:
-    """True when ``path`` is a zip or a LOCAL directory containing zips
-    at any depth — i.e. the native backend needs ``extract_bag_delivery``
-    first. Local-filesystem only by contract: remote URIs (s3://,
-    hdfs://) are not globbed here — ``read_bag_entity``'s auto mode
-    routes non-local paths to the zip-capable iterparse backend without
-    consulting this check (ADVICE r8)."""
-    import glob as _glob
-    import os
-
-    if os.path.isfile(path):
-        return path.lower().endswith(".zip")
+    """True when ``path`` is a zip or a local directory containing zips
+    at any depth — i.e. ``extract_bag_delivery`` must run before the scan.
+    BAG deliveries sometimes nest per-entity zips in subdirectories, so
+    the search is recursive (ADVICE r8). Remote URIs are not inspected
+    (False): the scan then fails loudly on them, since it lists local
+    files only."""
     if os.path.isdir(path):
-        # recursive: BAG deliveries sometimes nest per-entity zips in
-        # subdirectories; a top-level-only glob silently routed those
-        # to the zip-incapable native backend (ADVICE r8)
-        pats = [os.path.join(path, "**", "*.zip"),
-                os.path.join(path, "**", "*.ZIP")]
         return any(
-            p.lower().endswith(".zip")
-            for pat in pats
-            for p in _glob.iglob(pat, recursive=True)
+            f.lower().endswith(".zip")
+            for _, _, files in os.walk(path)
+            for f in files
         )
-    return any(
-        p.lower().endswith(".zip") for p in _glob.glob(path)
-    )
+    return any(p.lower().endswith(".zip") for p in glob.glob(path))
 
 
-def _is_local_path(path: str) -> bool:
-    """Scheme-less or file:// paths are local; anything with another
-    URI scheme (s3://, hdfs://, ...) is remote — the local glob checks
-    cannot see into it."""
-    import re
+class _RootSeen(Exception):
+    pass
 
-    m = re.match(r"^([A-Za-z][A-Za-z0-9+.-]*)://", path)
-    return m is None or m.group(1).lower() == "file"
+
+def _root_namespaces(path: str) -> dict[str, str]:
+    """xmlns declarations on a file's root element, prefix → URI (prefix
+    '' for the default namespace). Parses up to the root start tag only."""
+    found: dict[str, str] = {}
+
+    def start(_name, attrs):
+        found.update(
+            (k[6:], v) for k, v in attrs.items()
+            if k == "xmlns" or k.startswith("xmlns:")
+        )
+        raise _RootSeen
+
+    parser = expat.ParserCreate()
+    parser.StartElementHandler = start
+    with open(path, "rb") as f:
+        try:
+            while chunk := f.read(1 << 14):
+                parser.Parse(chunk, False)
+        except _RootSeen:
+            pass
+    return found
+
+
+_PREFIX_BY_URI = {ns[1:-1]: prefix for ns, prefix in _NS_PREFIX.items()}
+
+
+def _check_namespace_prefixes(xmls: list[str]) -> None:
+    """The scan matches qualified names as written, so a file binding a
+    known LVBAG namespace URI to another prefix (or as the default
+    namespace) would scan as zero rows without an error. Fail loudly
+    instead, naming the file and the prefix."""
+    for path in xmls:
+        for prefix, uri in _root_namespaces(path).items():
+            want = _PREFIX_BY_URI.get(uri)
+            if want is not None and prefix != want:
+                bound = (
+                    f"prefix {prefix!r}" if prefix else "the default namespace"
+                )
+                raise ValueError(
+                    f"{path}: namespace {uri!r} is bound to {bound}; the BAG "
+                    f"XML scan matches tags by the LVBAG prefix {want!r} "
+                    "as written"
+                )
 
 
 def read_bag_entity_raw_native(
     spark: SparkSession, path: str, entity_name: str
 ) -> DataFrame:
-    """JVM-native XML scan (Spark 4 built-in ``format("xml")``) — the
-    optional fast path next to ``read_bag_entity_raw``: the parse never
-    leaves the JVM (no Python workers, no Arrow transfer), which is where
-    the iterparse backend spends its import time. Produces the same
-    all-string raw schema, so ``finalize_entity`` is shared verbatim.
+    """JVM-native XML scan (Spark 4 built-in ``format("xml")``) → raw
+    all-string DataFrame with (file, ordinal) arrival order attached. The
+    parse never leaves the JVM: no Python workers, no Arrow transfer.
 
-    Contract (narrower than iterparse, enforced loudly):
-    - plain ``.xml`` files only — the reference's own extract step
-      produces exactly this layout (reference import_bag.py:31-37); a
-      zipped delivery must use the iterparse backend or be pre-extracted.
+    Contract (enforced loudly):
+    - plain local ``.xml`` files only — a zipped delivery raises; extract
+      it first (``extract_bag_delivery``; ``import_bag`` does this).
+    - LVBAG namespace URIs bound to their usual prefixes
+      (``_check_namespace_prefixes``).
     - entity tags as direct children of the object element, plus the
       real-delivery nested wrappers declared in ``_NATIVE_WRAPPERS``
-      (VBO maaktDeelUitVan/PandRef and geometrie/gml:Point/gml:pos —
-      parity-tested); the iterparse backend tolerates arbitrary nesting
-      because it keys on the child tag alone.
-    - ``__ordinal__`` is ``monotonically_increasing_id()`` — preserves
-      document order within a file, but the cross-file upsert tiebreak is
-      ``__file__`` first (same as iterparse), so last-write-wins differs
-      only for duplicate keys WITHIN one file whose parse splits across
-      partitions — not observed in real deliveries; use iterparse where
-      that matters.
+      (VBO maaktDeelUitVan/PandRef and geometrie/gml:Point/gml:pos).
+    - ``__ordinal__`` is ``monotonically_increasing_id()``: the XML source
+      never splits a file across partitions (unlike ``text``, whatever
+      ``spark.sql.files.maxPartitionBytes`` says), so within one file the
+      ordinal follows document order and a duplicate id later in the
+      file wins; across files the upsert orders by ``__file__`` first.
     """
-    import glob as _glob
-    import os
-
     entity = ENTITIES[entity_name]
-    listing = (
-        _glob.glob(os.path.join(path, "*")) if os.path.isdir(path)
-        else _glob.glob(path)
+    listing = glob.glob(
+        os.path.join(path, "*") if os.path.isdir(path) else path
     )
     zips = [p for p in listing if p.lower().endswith(".zip")]
     if zips:
         raise ValueError(
-            f"xml_backend='native' cannot read zip archives ({zips[:3]}…) "
-            "— extract the delivery first (extract_bag_delivery; the "
-            "import CLI does this automatically) or use "
-            "xml_backend='iterparse'"
+            f"the BAG XML scan cannot read zip archives ({zips[:3]}…) — "
+            "extract the delivery first (extract_bag_delivery; import_bag "
+            "does this automatically)"
         )
     xmls = [p for p in listing if p.lower().endswith(".xml")]
     if not xmls:
         raise FileNotFoundError(
-            f"xml_backend='native': no .xml files under {path!r}"
+            f"no .xml files under {path!r} (the BAG XML scan lists local "
+            "files only: copy and extract a remote delivery first)"
         )
+    _check_namespace_prefixes(xmls)
 
     df = (
         spark.read.format("xml")
@@ -512,7 +378,7 @@ def read_bag_entity_raw_native(
     for qtag, colname in entity.fields.items():
         arr = F.col(f"`{_prefixed(qtag)}`")
         if colname == "geometry" and entity.has_geometry:
-            # P9 bracket wrap per occurrence, as parse_xml_records does
+            # P9 bracket wrap per occurrence
             arr = F.transform(
                 arr, lambda x: F.concat(F.lit("["), x, F.lit("]"))
             )
@@ -627,30 +493,11 @@ def read_bag_entity(
     entity_name: str,
     cfg: EngineConfig = DEFAULT_CONFIG,
     snapshot_date: str | None = None,
-    member_prefix: str | None = None,
 ) -> DataFrame:
-    """Full S2 pipeline: XML files/zips at ``path`` → finalized entity
-    DataFrame. ``cfg.xml_backend`` picks the scan: "auto" (default:
-    the JVM-native parse for plain LOCAL .xml layouts — measured ~6%
-    faster end-to-end and parity-tested per entity — falling back to
-    iterparse when the delivery still contains zip archives at any
-    depth, or when the path is a remote URI the local zip check cannot
-    inspect, ADVICE r8), "iterparse" (zip-capable Python scan), or
-    "native" (JVM-side parse, plain .xml only)."""
-    backend = cfg.xml_backend
-    if backend == "auto":
-        backend = (
-            "native"
-            if _is_local_path(path) and not delivery_has_zips(path)
-            else "iterparse"
-        )
-    if backend == "native":
-        raw = read_bag_entity_raw_native(spark, path, entity_name)
-    elif backend == "iterparse":
-        raw = read_bag_entity_raw(spark, path, entity_name, member_prefix)
-    else:
-        raise ValueError(
-            f"unknown xml_backend {cfg.xml_backend!r} "
-            "(expected 'auto', 'iterparse' or 'native')"
-        )
-    return finalize_entity(raw, entity_name, cfg, snapshot_date)
+    """Full S2 pipeline: plain local XML files at ``path`` → finalized
+    entity DataFrame (see ``read_bag_entity_raw_native`` for the scan's
+    contract)."""
+    return finalize_entity(
+        read_bag_entity_raw_native(spark, path, entity_name),
+        entity_name, cfg, snapshot_date,
+    )

@@ -8,7 +8,7 @@ query-catalog bench (bench.py) never exercises that path, so this script
 times it end to end on a deterministic generator-scaled fixture shaped
 like the real delivery: per-entity zips of multi-object XML members, an
 inactive-record fraction for the status filter, and the full pipeline —
-zip scan → XML parse → dedup/upsert → enrichment → adressen build →
+zip extraction → XML parse → dedup/upsert → enrichment → adressen build →
 cleaning → parquet sinks (the transaction-commit twin of the reference's
 SQLite writes).
 
@@ -18,12 +18,12 @@ verblijfsobjecten (1:1 hoofdadres), N panden (1:1), N/50 openbare
 ruimten, N/2000 woonplaatsen+gemeenten (+GWR rows), N/500 ligplaatsen
 and standplaatsen with their own nummers, and ~10% extra INACTIVE
 num/vbo records that the P4/P5 status filter must drop. Members are
-split across several zip archives because the scan parallelizes per
-binary file — mirroring the real delivery's many-member layout, not an
-artificial single-blob worst case.
+split across several XML files because the scan parallelizes per file —
+mirroring the real delivery's many-member layout, not an artificial
+single-blob worst case.
 
 Usage:
-    python scripts/import_bench.py [N_ADDRESSES]      # default 50_000
+    python scripts/import_bench.py [N_ADDRESSES [REPS]]  # default 50_000, 2
 Prints one JSON line: {"metric": "import_bag", "n_addresses": ...,
 "value": sec, "unit": "sec", "addresses_per_sec": ..., "rows": {...}}.
 bench.py embeds the same measurement as its "import" field.
@@ -83,7 +83,7 @@ def generate_fixture(
 ) -> None:
     """``layout="zips"`` mirrors the real delivery (per-entity zip
     archives); ``layout="plain"`` writes the same members as loose .xml
-    files — the post-extract layout the native XML backend reads.
+    files — the post-extract layout the XML scan reads in place.
 
     Cyclic GC is suspended for the duration (restored in the finally):
     the builder holds tens of millions of live strings at reference
@@ -294,7 +294,6 @@ def run_import_bench(
     spark,
     n_addresses: int,
     work_dir: str,
-    xml_backend: str = "iterparse",
     reps: int = 2,
 ) -> dict:
     """Generate (untimed) then time the full import ``reps`` times;
@@ -306,24 +305,22 @@ def run_import_bench(
     stable estimator); ``value_median`` exposes variance.
 
     ``addresses`` counts the adressen table the import produced — the
-    same unit as the reference's 9.5M/360 s. ``xml_backend="native"``
-    times the JVM XML scan on the plain (post-extract) layout; the
-    default times the zip-capable iterparse scan on the zipped delivery
-    layout — the same stage split as the reference, whose 6-minute
-    number also starts from the delivery zip. Each rep imports into a
-    FRESH out_dir (removed between reps) so no parquet commit or cache
-    from one rep shortcuts the next."""
+    same unit as the reference's 9.5M/360 s. The fixture is the zipped
+    delivery layout, so every rep times the extraction too — the same
+    stage split as the reference, whose 6-minute number also starts from
+    the delivery zip. Each rep imports into a FRESH out_dir (removed
+    between reps) so no parquet commit or cache from one rep shortcuts
+    the next."""
     import shutil
 
     from bag_parser_spark.config import EngineConfig
     from bag_parser_spark.plans.bag_job import import_bag
 
-    layout = "plain" if xml_backend == "native" else "zips"
-    fixture = os.path.join(work_dir, f"bag_{n_addresses}_{layout}")
+    fixture = os.path.join(work_dir, f"bag_{n_addresses}_zips")
     if not os.path.isdir(fixture):
-        generate_fixture(fixture, n_addresses, layout=layout)
+        generate_fixture(fixture, n_addresses)
     cfg = EngineConfig(active_only=True, snapshot_date=SNAPSHOT,
-                       parse_geometries=False, xml_backend=xml_backend)
+                       parse_geometries=False)
     times: list[float] = []
     rows: dict[str, int] = {}
     n_adressen = 0
@@ -344,7 +341,6 @@ def run_import_bench(
     best = min(times)
     return {
         "metric": "import_bag",
-        "xml_backend": xml_backend,
         "n_addresses": n_adressen,
         "value": best,
         "value_median": round(_median(times), 3),
@@ -363,12 +359,11 @@ def main() -> int:
     from bag_parser_spark.session import get_spark
 
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 50_000
-    backend = sys.argv[2] if len(sys.argv) > 2 else "iterparse"
-    reps = int(sys.argv[3]) if len(sys.argv) > 3 else 2
+    reps = int(sys.argv[2]) if len(sys.argv) > 2 else 2
     spark = get_spark(app_name="bag-import-bench")
     work = tempfile.mkdtemp(prefix="bag_import_bench_")
     try:
-        print(json.dumps(run_import_bench(spark, n, work, backend, reps)))
+        print(json.dumps(run_import_bench(spark, n, work, reps)))
     finally:
         shutil.rmtree(work, ignore_errors=True)
         spark.stop()

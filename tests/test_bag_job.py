@@ -170,8 +170,8 @@ def test_csv_header_validation(spark, tmp_path):
 def test_import_bag_from_raw_delivery_zip(spark, tmp_path):
     """Point import_bag at a directory holding ONLY the combined delivery
     zip (outer zip → per-entity zips → XML members, the reference's
-    lvbag-extract-nl.zip layout): the per-entity member-prefix filter must
-    route every entity to its own members with no pre-extraction step."""
+    lvbag-extract-nl.zip layout): the extraction keeps each member's file
+    code, so every entity reads only its own members."""
     import io
     import zipfile
 
@@ -211,6 +211,6 @@ def test_import_bag_from_raw_delivery_zip(spark, tmp_path):
     assert len(a) == 1
     assert a[0]["nummer_id"] == "NUM1"
     assert a[0]["gemeente_id"] == 362
-    # the prefix filter kept entities apart: woonplaatsen has exactly the
-    # two WPL records, none of the other entities' members leaked in
+    # the file-code names kept entities apart: woonplaatsen has exactly
+    # the two WPL records, none of the other entities' members leaked in
     assert tables["woonplaatsen"].count() == 2

@@ -337,77 +337,39 @@ def test_cli_ingest_budget_deferral(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_cli_import_native_xml_backend(tmp_path):
-    """`import --xml-backend native` runs the JVM XML scan end to end on
-    a plain (pre-extracted) delivery and produces the same adressen the
-    iterparse backend would."""
+def test_cli_import_plain_and_zipped_delivery(tmp_path):
+    """`import` on a plain (pre-extracted) delivery and on the ZIPPED
+    per-entity-zip layout of the same fixture: the CLI extracts the zips
+    under --out, runs the JVM XML scan, removes the extraction dir after
+    the persist cut, and both produce the same adressen."""
     import sys as _sys
 
     _sys.path.insert(0, REPO)
     from scripts.import_bench import SNAPSHOT, generate_fixture
 
-    fixture = tmp_path / "plain"
-    generate_fixture(str(fixture), 300, objects_per_file=100, layout="plain")
     out = {}
-    for backend in ("native", "iterparse"):
-        out_dir = str(tmp_path / f"db_{backend}")
+    for layout in ("plain", "zips"):
+        fixture = tmp_path / layout
+        generate_fixture(str(fixture), 300, objects_per_file=100,
+                         layout=layout)
+        out_dir = str(tmp_path / f"db_{layout}")
         r = _run_cli(
             "import", "--bag", str(fixture),
             "--gemeenten", str(fixture / "gemeenten.csv"),
             "--out", out_dir, "--snapshot-date", SNAPSHOT,
-            "--xml-backend", backend,
         )
         assert r.returncode == 0, r.stderr[-2000:]
         import duckdb
 
         con = duckdb.connect()
-        out[backend] = con.execute(
+        out[layout] = con.execute(
             "SELECT nummer_id, postcode, huisnummer, openbare_ruimte_id, "
             "woonplaats_id, pand_id FROM "
             f"read_parquet('{out_dir}/adressen/*.parquet') ORDER BY nummer_id"
         ).fetchall()
         con.close()
-    assert out["native"] == out["iterparse"] and len(out["native"]) == 300
-
-
-@pytest.mark.slow
-def test_cli_import_native_backend_zipped_delivery(tmp_path):
-    """`import --xml-backend native` on a ZIPPED delivery (the real
-    per-entity-zip layout): the CLI transparently extracts to plain .xml
-    under --out, runs the JVM scan, removes the extraction dir after the
-    persist cut, and produces the same adressen as iterparse on the
-    same zips (VERDICT r5 #8)."""
-    import sys as _sys
-
-    _sys.path.insert(0, REPO)
-    from scripts.import_bench import SNAPSHOT, generate_fixture
-
-    fixture = tmp_path / "zipped"
-    generate_fixture(str(fixture), 300, objects_per_file=100, layout="zips")
-    out = {}
-    for backend in ("native", "iterparse"):
-        out_dir = str(tmp_path / f"db_{backend}")
-        r = _run_cli(
-            "import", "--bag", str(fixture),
-            "--gemeenten", str(fixture / "gemeenten.csv"),
-            "--out", out_dir, "--snapshot-date", SNAPSHOT,
-            "--xml-backend", backend,
-        )
-        assert r.returncode == 0, r.stderr[-2000:]
-        import duckdb
-
-        con = duckdb.connect()
-        out[backend] = con.execute(
-            "SELECT nummer_id, postcode, huisnummer, openbare_ruimte_id, "
-            "woonplaats_id, pand_id FROM "
-            f"read_parquet('{out_dir}/adressen/*.parquet') ORDER BY nummer_id"
-        ).fetchall()
-        con.close()
-    assert out["native"] == out["iterparse"] and len(out["native"]) == 300
-    # the transparent extraction cleans up after itself
-    assert not os.path.exists(
-        str(tmp_path / "db_native" / "_native_xml_extract")
-    )
+        assert not os.path.exists(os.path.join(out_dir, "_xml_extract"))
+    assert out["plain"] == out["zips"] and len(out["plain"]) == 300
 
 
 @pytest.mark.slow
