@@ -19,9 +19,9 @@ Above the threshold the function is an exact no-op (the plan is
 returned unchanged, no exchange is added), so at cluster scale —
 where inputs are TB-sized and split naturally — the repartition
 disappears and the plan is byte-identical to the unguarded form.
-The threshold is env-tunable (``SPARK_GRAFT_FANOUT_MAX_BYTES``,
-default 256 MiB; ``0`` disables fan-out entirely, which is also the
-A/B switch the round's measurements used). 256 MiB crosses a 3 GB/s
+The threshold is the module constant ``FANOUT_MAX_BYTES`` (256 MiB;
+``0`` disables fan-out entirely, which is also the A/B switch: patch
+the constant, as the guard's test does). 256 MiB crosses a 3 GB/s
 NIC in under 100 ms (guide §1.3 napkin math), while CPU-dense map
 work over it costs seconds to minutes serial — the trade is safe by
 orders of magnitude wherever this helper is applied.
@@ -34,13 +34,11 @@ cost more than the cheap warm extraction saved).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 from bag_parser_spark.session import default_parallelism
 
-_DEFAULT_MAX_BYTES = 256 << 20
+FANOUT_MAX_BYTES = 256 << 20
 
 
 def _plan_size_bytes(df: DataFrame) -> int | None:
@@ -65,12 +63,9 @@ def fan_out_cpu_dense(
     row-to-partition map is a pure function of the key, so task retries
     and speculative copies land rows identically (guide §2.5 —
     SPARK-38388 class of bugs cannot happen)."""
-    limit = int(
-        os.environ.get("SPARK_GRAFT_FANOUT_MAX_BYTES", str(_DEFAULT_MAX_BYTES))
-    )
-    if limit <= 0:
+    if FANOUT_MAX_BYTES <= 0:
         return df
     size = _plan_size_bytes(df)
-    if size is None or size > limit:
+    if size is None or size > FANOUT_MAX_BYTES:
         return df
     return df.repartition(parts or default_parallelism(), *key_cols)

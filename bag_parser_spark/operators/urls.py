@@ -573,7 +573,6 @@ ROBOTS_BROADCAST_DOMAIN_LIMIT = 1_000_000
 def apply_robots(
     pages: DataFrame,
     rules: DataFrame,
-    id_col: str = "doc_id",
     host_col: str = "hostname",
     path_col: str = "npath",
     broadcast_domain_limit: int | None = ROBOTS_BROADCAST_DOMAIN_LIMIT,
@@ -598,8 +597,7 @@ def apply_robots(
     higher-order-function expressions riding the scan. The CORPUS
     never shuffles at all in the broadcast route (the r7 version
     ranked matches with a doc-keyed window, i.e. one full-corpus
-    shuffle per robots pass; ``id_col`` is kept for signature
-    stability but the per-row form no longer needs a doc key). The
+    shuffle per robots pass; the per-row form needs no doc key). The
     winner is ``array_max`` over structs keyed (octet length,
     is_allow): longest rule wins, a length tie goes to allow — §2.2.2
     without a sort. Returns the pages with `allowed` + the deciding
@@ -622,7 +620,6 @@ def apply_robots(
     forces the broadcast (the pre-r9 behavior, for callers that know
     their rules side); ``0`` forces the shuffle route.
     """
-    del id_col  # per-row evaluation: no doc key needed since r8
     per_dom = (
         rules.filter(F.col("path_prefix") != "")
         .select(

@@ -47,17 +47,6 @@ from bag_parser_spark.sources.gemeenten_csv import (
     read_gemeenten_csv,
 )
 
-XML_ENTITIES = [
-    "Woonplaats",
-    "GemeenteWoonplaatsRelatie",
-    "OpenbareRuimte",
-    "Nummeraanduiding",
-    "Pand",
-    "Verblijfsobject",
-    "Ligplaats",
-    "Standplaats",
-]
-
 ENTITY_TABLE_NAMES = {
     "Woonplaats": "woonplaatsen",
     "GemeenteWoonplaatsRelatie": "gemeente_woonplaatsen",
@@ -136,8 +125,8 @@ def _import_bag_inner(
         "gemeenten": gemeenten_table(csv_df),
         "provincies": provincies_table(csv_df),
     }
-    for entity in XML_ENTITIES:
-        tables[ENTITY_TABLE_NAMES[entity]] = read_bag_entity(
+    for entity, table in ENTITY_TABLE_NAMES.items():
+        tables[table] = read_bag_entity(
             spark, entity_xml_path(xml_root, entity), entity, cfg
         )
 

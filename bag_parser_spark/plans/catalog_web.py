@@ -887,7 +887,6 @@ def q_web_robots_filter(spark, sf_dir):
     return urls.apply_robots(
         pages,
         urls.rules_for_agent(rules, _ROBOTS_AGENT),
-        id_col="doc_id",
         host_col="hostname",
         path_col="npath",
     )
@@ -1232,7 +1231,7 @@ def q_warc_records(spark, sf_dir):
 def q_wet_records(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select("doc_id")
     files = _warc.generate_synthetic_warc(
-        docs, n_files=_SYNTH_FILES, wet=True
+        docs, n_files=_SYNTH_FILES, fmt="wet"
     )
     recs = _warc.parse_warc_frame(
         files, record_types=("conversion",), parse_http=False

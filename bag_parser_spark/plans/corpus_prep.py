@@ -247,7 +247,6 @@ def _prepare_corpus_run(
                 urls.apply_robots(
                     paged,
                     eff_rules,
-                    id_col=id_col,
                     host_col="__hostname__",
                     path_col="__npath__",
                 )

@@ -76,11 +76,10 @@ def get_spark(
         # 4.0 -> 3.0 s at 128k). The floor only binds when a stage's
         # bytes are small relative to cores, so at cluster scale
         # (GB-sized stages) it is a no-op — partition sizing there is
-        # still parallelism/advisory-driven. Env-overridable for
-        # deployments whose cost model differs.
+        # still parallelism/advisory-driven. Deployments whose cost
+        # model differs override it through ``extra_conf``.
         .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "128k"),
+            "spark.sql.adaptive.coalescePartitions.minPartitionSize", "128k"
         )
     )
     for k, v in (extra_conf or {}).items():

@@ -6,15 +6,17 @@ the reference spreads across XML-tag maps (reference bag/bag_parser.py:
 and data_init defaulting dicts. Namespaces and field names follow the
 public Kadaster LVBAG 2.0 schema (www.kadaster.nl/schemas/lvbag/...).
 
-Parse-stage columns are all strings with '' defaults ("BAG leaves fields
-out of the data if it is empty" — reference bag_parser.py:258); typing to
-int/double happens in the typed projection, and ''→NULL in cleaning —
-making the SQLite ''-vs-NULL nuance explicit instead of implicit.
+Parse-stage columns (the values of ``fields`` and ``parent_fields``) are
+all strings defaulting to '', as every entry of the reference's data_init
+dicts does ("BAG leaves fields out of the data if it is empty" —
+reference bag_parser.py:258); typing to int/double happens in the typed
+projection, and ''→NULL in cleaning — making the SQLite ''-vs-NULL
+nuance explicit instead of implicit.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 NS_OBJECTEN = "{www.kadaster.nl/schemas/lvbag/imbag/objecten/v20200601}"
 NS_OBJECTEN_REF = "{www.kadaster.nl/schemas/lvbag/imbag/objecten-ref/v20200601}"
@@ -24,7 +26,6 @@ NS_GML = "{http://www.opengis.net/gml/3.2}"
 NS_GWR = "{www.kadaster.nl/schemas/lvbag/gem-wpl-rel/gwr-producten-lvc/v20200601}"
 NS_BAGTYPES = "{www.kadaster.nl/schemas/lvbag/gem-wpl-rel/bag-types/v20200601}"
 
-_COMMON_INIT = {"status": "", "begindatum_geldigheid": "", "einddatum_geldigheid": ""}
 _HISTORIE = {
     NS_HISTORIE + "beginGeldigheid": "begindatum_geldigheid",
     NS_HISTORIE + "eindGeldigheid": "einddatum_geldigheid",
@@ -40,7 +41,6 @@ class EntityConfig:
     file_code: str                 # zip member code, e.g. 9999WPL
     fields: dict[str, str]         # qualified child tag → column
     parent_fields: dict[str, str]  # (parent tag + child tag) → column (S3)
-    defaults: dict[str, str]       # data_init: column → '' default (P2)
     status_active: str | None      # P4 status filter value (None = no filter)
     upsert_key: str | None         # REPLACE INTO key (S7); None = append-only
     has_geometry: bool = False
@@ -63,7 +63,6 @@ ENTITIES: dict[str, EntityConfig] = {
             **_HISTORIE,
         },
         parent_fields={},
-        defaults={**_COMMON_INIT, "id": "", "naam": "", "geometry": ""},
         status_active="Woonplaats aangewezen",
         upsert_key="id",
         has_geometry=True,
@@ -84,7 +83,6 @@ ENTITIES: dict[str, EntityConfig] = {
             NS_GWR + "gerelateerdeWoonplaats" + NS_GWR + "identificatie": "woonplaats_id",
             NS_GWR + "gerelateerdeGemeente" + NS_GWR + "identificatie": "gemeente_id",
         },
-        defaults={**_COMMON_INIT, "woonplaats_id": "", "gemeente_id": ""},
         status_active=None,
         upsert_key=None,
         int_fields=("woonplaats_id", "gemeente_id"),
@@ -103,14 +101,6 @@ ENTITIES: dict[str, EntityConfig] = {
             **_HISTORIE,
         },
         parent_fields={},
-        defaults={
-            **_COMMON_INIT,
-            "id": "",
-            "lange_naam": "",
-            "verkorte_naam": "",
-            "type": "",
-            "woonplaats_id": "",
-        },
         status_active="Naamgeving uitgegeven",
         upsert_key="id",
         int_fields=("woonplaats_id",),
@@ -131,16 +121,6 @@ ENTITIES: dict[str, EntityConfig] = {
             **_HISTORIE,
         },
         parent_fields={},
-        defaults={
-            **_COMMON_INIT,
-            "id": "",
-            "postcode": "",
-            "huisnummer": "",
-            "huisletter": "",
-            "toevoeging": "",
-            "openbare_ruimte_id": "",
-            "woonplaats_id": "",
-        },
         status_active="Naamgeving uitgegeven",
         upsert_key="id",
         int_fields=("huisnummer",),
@@ -157,7 +137,6 @@ ENTITIES: dict[str, EntityConfig] = {
             **_HISTORIE,
         },
         parent_fields={},
-        defaults={**_COMMON_INIT, "id": "", "bouwjaar": "", "geometry": ""},
         status_active=None,  # Pand has no status filter (bag_parser.py:57-59)
         upsert_key="id",
         has_geometry=True,
@@ -183,16 +162,6 @@ ENTITIES: dict[str, EntityConfig] = {
             NS_OBJECTEN + "heeftAlsHoofdadres" + NS_OBJECTEN_REF + "NummeraanduidingRef": "nummer_id",
             NS_OBJECTEN + "heeftAlsNevenadres" + NS_OBJECTEN_REF + "NummeraanduidingRef": "nevenadressen",
         },
-        defaults={
-            **_COMMON_INIT,
-            "id": "",
-            "oppervlakte": "",
-            "gebruiksdoel": "",
-            "pos": "",
-            "pand_id": "",
-            "nummer_id": "",
-            "nevenadressen": "",
-        },
         status_active=None,
         upsert_key="id",
         has_geometry=False,
@@ -212,7 +181,6 @@ ENTITIES: dict[str, EntityConfig] = {
         parent_fields={
             NS_OBJECTEN + "heeftAlsHoofdadres" + NS_OBJECTEN_REF + "NummeraanduidingRef": "nummer_id",
         },
-        defaults={**_COMMON_INIT, "id": "", "geometry": "", "nummer_id": ""},
         status_active=None,
         upsert_key="id",
         has_geometry=True,
@@ -231,7 +199,6 @@ ENTITIES: dict[str, EntityConfig] = {
         parent_fields={
             NS_OBJECTEN + "heeftAlsHoofdadres" + NS_OBJECTEN_REF + "NummeraanduidingRef": "nummer_id",
         },
-        defaults={**_COMMON_INIT, "id": "", "geometry": "", "nummer_id": ""},
         status_active=None,
         upsert_key="id",
         has_geometry=True,

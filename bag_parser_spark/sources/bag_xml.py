@@ -44,7 +44,7 @@ from bag_parser_spark.sources.bag_schemas import ENTITIES, EntityConfig
 
 
 def _raw_schema(entity: EntityConfig) -> T.StructType:
-    cols = sorted(set(entity.defaults) | set(entity.fields.values())
+    cols = sorted(set(entity.fields.values())
                   | set(entity.parent_fields.values()))
     return T.StructType(
         [T.StructField(c, T.StringType()) for c in cols]
@@ -403,11 +403,9 @@ def read_bag_entity_raw_native(
         )
     target = _raw_schema(entity)
     out = [
-        F.coalesce(
-            F.array_join(cols[c], ","), F.lit(entity.defaults.get(c, ""))
-        ).alias(c)
+        F.coalesce(F.array_join(cols[c], ","), F.lit("")).alias(c)
         if c in cols
-        else F.lit(entity.defaults.get(c, "")).alias(c)
+        else F.lit("").alias(c)
         for c in target.fieldNames()
         if c not in ("__file__", "__ordinal__")
     ]

@@ -121,46 +121,3 @@ def compact_parquet(
         df = df.localCheckpoint(eager=True)
     df.repartition(n_files).write.mode("overwrite").parquet(dest)
     return n_files
-
-
-def write_partitioned(
-    df: DataFrame, out_dir: str, partition_cols: list[str]
-) -> None:
-    """Hive-style partitioned layout (``out_dir/col=value/…``) — the
-    directory-level complement to ``write_bucketed``: bucketing organizes
-    WITHIN files by join key; partitioning organizes the DIRECTORY tree by
-    a low-cardinality scan key (almost always the date) so Catalyst prunes
-    whole partitions from a scan before reading a byte — .explain shows
-    the predicate under PartitionFilters, not PushedFilters. The standard
-    100 TB table layout: partition by ingest date, bucket by join key,
-    compact per partition (compact_parquet)."""
-    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(out_dir)
-
-
-def overwrite_partitions_dynamic(
-    df: DataFrame, out_dir: str, partition_cols: list[str]
-) -> None:
-    """Dynamic partition overwrite: replace ONLY the partitions present in
-    ``df``, leave every other partition untouched — the idempotent
-    incremental-load pattern (re-running a day's ingest rewrites that
-    day's directory and nothing else; a plain overwrite would drop the
-    whole table). Writer-level option, no session mutation, so concurrent
-    jobs with static overwrite semantics are unaffected."""
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_cols)
-        .parquet(out_dir)
-    )
-
-
-def read_merged_schema(spark: SparkSession, *paths: str) -> DataFrame:
-    """Schema-evolution read: union parquet generations whose schemas
-    drifted (columns added over time), resolving to the merged schema
-    with NULLs where an older file lacks a column. ``mergeSchema`` makes
-    the footer reconciliation explicit and one-time per query — the
-    default (first-file schema) silently DROPS new columns, which at
-    100 TB means a backfill reading a year of daily drops quietly loses
-    the fields added mid-year. Renames/type changes still need an
-    explicit migration; this covers the additive case that dominates."""
-    return spark.read.option("mergeSchema", "true").parquet(*paths)

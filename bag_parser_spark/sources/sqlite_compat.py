@@ -16,9 +16,6 @@ executemany inserts in one transaction per table. Use it for the
 reference-parity artifact (~10M rows, the reference's own scale); at
 100 TB the native parquet sink is the only sensible shape and this sink
 refuses nothing but will simply take as long as SQLite takes.
-
-The inverse direction (read a SQLite file into DataFrames) is provided
-for roundtrip testing and migration *from* the reference's bag.sqlite.
 """
 
 from __future__ import annotations
@@ -26,7 +23,7 @@ from __future__ import annotations
 import sqlite3
 from collections.abc import Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 # Spark type → SQLite column affinity (reference database_sqlite.py:30-76
@@ -166,39 +163,3 @@ def write_bag_sqlite(
             tables[name], db_path, name, primary_key=BAG_TABLE_KEYS.get(name)
         )
     return counts
-
-
-def read_sqlite_table(
-    spark: SparkSession, db_path: str, table: str
-) -> DataFrame:
-    """Read a SQLite table back into a DataFrame (roundtrip testing and
-    migration from the reference's bag.sqlite). Driver-side fetch — the
-    file is a single local artifact by definition; type fidelity follows
-    SQLite's dynamic typing (INTEGER→long, REAL→double, TEXT→string)."""
-    con = sqlite3.connect(db_path)
-    try:
-        cur = con.execute(f'SELECT * FROM "{table}"')
-        col_names = [d[0] for d in cur.description]
-        rows = cur.fetchall()
-        # declared types via the SAME connection — no second file open
-        decl = {
-            r[1]: r[2]
-            for r in con.execute(f'PRAGMA table_info("{table}")').fetchall()
-        }
-    finally:
-        con.close()
-    fields = []
-    for c in col_names:
-        t = (decl.get(c) or "TEXT").upper()
-        if "INT" in t:
-            spark_t: T.DataType = T.LongType()
-        elif t in ("REAL", "FLOAT", "DOUBLE"):
-            spark_t = T.DoubleType()
-        elif t == "BLOB":
-            spark_t = T.BinaryType()
-        else:
-            spark_t = T.StringType()
-        fields.append(T.StructField(c, spark_t))
-    return spark.createDataFrame(rows, T.StructType(fields))
-
-

@@ -410,9 +410,8 @@ def synth_wat_record(doc_id: int) -> bytes:
 def generate_synthetic_warc(
     docs: DataFrame,
     n_files: int = 8,
-    wet: bool = False,
     doc_id_col: str = "doc_id",
-    fmt: str | None = None,
+    fmt: str = "warc",
 ) -> DataFrame:
     """(path, content) rows of synthetic WARC/WET/WAT files — one file
     per ``doc_id % n_files`` bucket, records in doc_id order inside each
@@ -421,17 +420,15 @@ def generate_synthetic_warc(
     that writes them). The output feeds ``parse_warc_frame`` directly —
     the same (path, content) contract a binaryFile scan produces.
     ``fmt`` selects 'warc' (response records), 'wet' (conversion) or
-    'wat' (metadata + JSON link envelope); the legacy ``wet`` flag is
-    shorthand for fmt='wet'."""
+    'wat' (metadata + JSON link envelope)."""
     from pyspark.sql import functions as F
 
-    ext = fmt or ("wet" if wet else "warc")
     builders = {
         "warc": lambda d: synth_record(d, wet=False),
         "wet": lambda d: synth_record(d, wet=True),
         "wat": synth_wat_record,
     }
-    make_record = builders[ext]
+    make_record = builders[fmt]
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(doc_id_col)
@@ -452,7 +449,7 @@ def generate_synthetic_warc(
             make_record(int(d)) for d in pdf[doc_id_col]
         )
         return pd.DataFrame(
-            {"path": [f"synthetic/{f:02d}.{ext}"], "content": [data]}
+            {"path": [f"synthetic/{f:02d}.{fmt}"], "content": [data]}
         )
 
     return (
@@ -570,15 +567,6 @@ def read_wat(spark: SparkSession, path: str) -> DataFrame:
     return parse_warc_frame(
         files, record_types=("metadata",), parse_http=False
     )
-
-
-def wat_to_links(spark: SparkSession, path: str) -> DataFrame:
-    """Path-level composition: WAT scan (``read_wat``) →
-    ``wat_links_frame``. Kept as the user-facing entry; the frame-level
-    core lets the synthetic value-level oracle (``wat_links`` in the
-    catalog) feed generator output through the REAL parser without a
-    filesystem roundtrip."""
-    return wat_links_frame(read_wat(spark, path))
 
 
 def wat_links_frame(records: DataFrame) -> DataFrame:

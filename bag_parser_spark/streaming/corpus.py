@@ -358,7 +358,6 @@ def _ingest_batch_inner(
                 urls.apply_robots(
                     paged,
                     eff,
-                    id_col=id_col,
                     host_col="__hostname__",
                     path_col="__npath__",
                 )

@@ -146,22 +146,6 @@ def windowed_event_counts(
     )
 
 
-def run_stream_to_memory(
-    spark: SparkSession, path: str, table_name: str = "events_windowed"
-) -> None:
-    """Drain the stream with Trigger.AvailableNow into an in-memory sink
-    (complete mode) — used by tests to compare against the batch twin."""
-    agg = windowed_event_counts(read_events_stream(spark, path))
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def dedup_events_stream(
     events: DataFrame, keys: list[str] | None = None, watermark: str = "2 hours"
 ) -> DataFrame:
@@ -180,22 +164,6 @@ def dedup_events_stream(
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         keys or ["event_id"]
     )
-
-
-def run_dedup_stream_to_memory(
-    spark: SparkSession, path: str, table_name: str = "events_deduped"
-) -> None:
-    """Drain the deduped stream with Trigger.AvailableNow into a memory
-    sink (append mode — dedup emits rows, not updated aggregates)."""
-    deduped = dedup_events_stream(read_events_stream(spark, path))
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def enrich_events_stream(
@@ -229,30 +197,6 @@ def enrich_events_stream(
             F.col("n_name").alias("nation_name"),
         )
     )
-
-
-def run_enrich_stream_to_memory(
-    spark: SparkSession,
-    path: str,
-    sf_dir: str,
-    table_name: str = "events_enriched",
-) -> None:
-    """Drain the stream-static enrichment with AvailableNow into a memory
-    sink (append mode — stateless joins emit rows as they arrive)."""
-    from bag_parser_spark.sources.parquet import load_table
-
-    ev = read_events_stream(spark, path)
-    c = load_table(spark, sf_dir, "customer")
-    n = load_table(spark, sf_dir, "nation")
-    q = (
-        enrich_events_stream(ev, c, n)
-        .writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def interval_join_stream(
@@ -292,29 +236,6 @@ def interval_join_stream(
         F.col("r.value").alias("r_value"),
     )
 
-
-def run_interval_join_to_memory(
-    spark: SparkSession, path: str, table_name: str = "events_ijoin"
-) -> None:
-    """Drain the stream-stream interval join with AvailableNow into a
-    memory sink (append mode — inner joins emit matched rows as both
-    watermarks pass)."""
-    ev = read_events_stream(spark, path)
-    l = ev.filter(F.col("event_type") == "error").select(
-        "event_id", "user_id", "ts"
-    )
-    r = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts", "event_id", "value"
-    )
-    q = (
-        interval_join_stream(l, r)
-        .writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 def ohlc_stream(
     events: DataFrame,
@@ -363,21 +284,6 @@ def ohlc_stream(
     )
 
 
-def run_ohlc_stream_to_memory(
-    spark: SparkSession, path: str, table_name: str = "events_ohlc"
-) -> None:
-    """Drain the OHLC stream with AvailableNow into a memory sink
-    (complete mode — tests read the final bars)."""
-    agg = ohlc_stream(read_events_stream(spark, path))
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
 def interval_join_stream_left_outer(
     left: DataFrame,
     right: DataFrame,
@@ -420,27 +326,3 @@ def interval_join_stream_left_outer(
         F.col("r.event_id").alias("r_event_id"),
         F.col("r.value").alias("r_value"),
     )
-
-
-def run_interval_join_outer_to_memory(
-    spark: SparkSession, path: str, table_name: str = "events_ijoin_outer"
-) -> None:
-    """Drain the left-outer stream-stream interval join with AvailableNow
-    into a memory sink (append mode; NULL-padded rows emit as the
-    watermark passes them)."""
-    ev = read_events_stream(spark, path)
-    l = ev.filter(F.col("event_type") == "error").select(
-        "event_id", "user_id", "ts"
-    )
-    r = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts", "event_id", "value"
-    )
-    q = (
-        interval_join_stream_left_outer(l, r)
-        .writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -208,25 +208,3 @@ def sessionize_stream(
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
-
-
-def run_sessionize_to_memory(
-    spark, path: str, table_name: str = "events_sessions", gap_minutes: int = 360
-) -> None:
-    """Drain the sessionize stream with AvailableNow into a memory sink."""
-    from bag_parser_spark.streaming.events import read_events_stream
-
-    sess = sessionize_stream(
-        read_events_stream(spark, path).select(
-            "user_id", "ts", "event_id", "value"
-        ),
-        gap_minutes=gap_minutes,
-    )
-    q = (
-        sess.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -43,21 +43,3 @@ def idempotent_batch_writer(out_dir: str) -> Callable[[DataFrame, int], None]:
         )
 
     return write_batch
-
-
-def run_events_to_parquet_exactly_once(
-    spark: SparkSession, path: str, out_dir: str, checkpoint_dir: str
-) -> None:
-    """Drain the events stream into a parquet sink with exactly-once
-    semantics: AvailableNow trigger, checkpointed offsets, idempotent
-    batch writes."""
-    from bag_parser_spark.streaming.events import read_events_stream
-
-    ev = read_events_stream(spark, path)
-    q = (
-        ev.writeStream.foreachBatch(idempotent_batch_writer(out_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -28,13 +28,13 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from bag_parser_spark.operators.sketches import (
     bloom_build,
     count_min_build,
     count_min_merge,
 )
+from bag_parser_spark.streaming.sinks import idempotent_batch_writer
 
 
 def countmin_partials_writer(
@@ -44,44 +44,13 @@ def countmin_partials_writer(
     partial count-min sketch and write it under ``batch_id=N`` with
     dynamic overwrite — replay-safe, and the shuffle per batch carries
     at most d*w cell rows, never the batch's raw keys."""
+    write = idempotent_batch_writer(out_dir)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            count_min_build(batch_df, key_col, depth=depth, width=width)
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
+        write(count_min_build(batch_df, key_col, depth=depth, width=width),
+              batch_id)
 
     return write_batch
-
-
-def run_countmin_stream(
-    spark: SparkSession,
-    path: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    key_col: str = "user_id",
-    depth: int = 3,
-    width: int = 256,
-) -> None:
-    """Drain the events stream into per-batch count-min partials with
-    exactly-once semantics (AvailableNow + checkpoint + idempotent
-    partition writes)."""
-    from bag_parser_spark.streaming.events import read_events_stream
-
-    ev = read_events_stream(spark, path)
-    q = (
-        ev.writeStream.foreachBatch(
-            countmin_partials_writer(out_dir, key_col, depth, width)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def read_merged_sketch(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -102,16 +71,10 @@ def bloom_partials_writer(
     merged filter equals a batch build over the full history and a
     replayed batch is doubly harmless — overwritten by partition AND a
     set-union no-op."""
+    write = idempotent_batch_writer(out_dir)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            bloom_build(batch_df, key_col, k=k, m=m)
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
+        write(bloom_build(batch_df, key_col, k=k, m=m), batch_id)
 
     return write_batch
 

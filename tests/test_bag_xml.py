@@ -333,12 +333,15 @@ def test_native_backend_parity_on_generated_corpus(spark, tmp_path):
     stays JVM-side)."""
     from scripts.import_bench import SNAPSHOT, generate_fixture
 
-    from bag_parser_spark.plans.bag_job import XML_ENTITIES, entity_xml_path
+    from bag_parser_spark.plans.bag_job import (
+        ENTITY_TABLE_NAMES,
+        entity_xml_path,
+    )
 
     root = str(tmp_path / "plain")
     generate_fixture(root, 1500, objects_per_file=400, layout="plain")
     cfg = EngineConfig(active_only=True, snapshot_date=SNAPSHOT)
-    for entity in XML_ENTITIES:
+    for entity in ENTITY_TABLE_NAMES:
         path = entity_xml_path(root, entity)
         got = read_bag_entity(spark, path, entity, cfg)
         plan = got._jdf.queryExecution().executedPlan().toString()

@@ -3,8 +3,9 @@
 The subprocess test drives import → export → validate end-to-end on the
 XML fixture — the exact workflow a reference user runs via
 import_bag.py / export_to_csv.py / test_sqlite_db.py. The sink tests
-roundtrip DataFrames through a SQLite file (write → re-read → value
-compare), proving a consumer of the reference's bag.sqlite can read ours.
+roundtrip DataFrames through a SQLite file (write → re-read with sqlite3
+→ value compare), proving a consumer of the reference's bag.sqlite can
+read ours.
 """
 
 from __future__ import annotations
@@ -21,10 +22,7 @@ import sys
 from pyspark.sql import functions as F
 
 from bag_parser_spark.sources.parquet import load_table
-from bag_parser_spark.sources.sqlite_compat import (
-    read_sqlite_table,
-    write_sqlite_table,
-)
+from bag_parser_spark.sources.sqlite_compat import write_sqlite_table
 from tests.conftest import SF_SMOKE
 from tests.test_bag_job import SNAPSHOT, _write_inputs
 
@@ -116,19 +114,33 @@ def test_cli_import_export_validate_end_to_end(tmp_path):
 
 
 def test_sqlite_sink_roundtrip_typed_table(spark, tmp_path):
-    """write → re-read → exact value match on a table mixing long, double,
-    and string columns (the adressen dtype surface)."""
+    """write → re-read with sqlite3, as the reference's consumers read
+    bag.sqlite → the declared column types and key, and an exact value
+    match, on a table mixing long, double and string columns (the
+    adressen dtype surface)."""
     db = str(tmp_path / "rt.sqlite")
     src = load_table(spark, SF_SMOKE, "customer").select(
         "c_custkey", "c_name", "c_acctbal", "c_mktsegment"
     )
     n = write_sqlite_table(src, db, "customer", primary_key="c_custkey")
     assert n == src.count() > 0
-    back = read_sqlite_table(spark, db, "customer")
-    assert dict(back.dtypes) == dict(src.dtypes)
-    want = sorted(map(tuple, src.collect()))
-    got = sorted(map(tuple, back.collect()))
-    assert got == want
+    con = sqlite3.connect(db)
+    try:
+        # (name, declared type, is primary key) per column
+        decl = [
+            (r[1], r[2], r[5])
+            for r in con.execute('PRAGMA table_info("customer")')
+        ]
+        got = sorted(con.execute('SELECT * FROM "customer"').fetchall())
+    finally:
+        con.close()
+    assert decl == [
+        ("c_custkey", "INTEGER", 1),
+        ("c_name", "TEXT", 0),
+        ("c_acctbal", "REAL", 0),
+        ("c_mktsegment", "TEXT", 0),
+    ]
+    assert got == sorted(map(tuple, src.collect()))
 
 
 def test_sqlite_sink_batching_and_overwrite(spark, tmp_path):

@@ -841,109 +841,6 @@ def test_zorder_key_known_values(spark):
     assert rows[4] == 0b1111  # (3,3) -> low two bit-pairs set
 
 
-def test_partitioned_write_prunes_partitions(spark, tmp_path):
-    """Date-partitioned layout: a date predicate lands in PartitionFilters
-    (directory pruning — zero bytes read from other days), and the pruned
-    read returns exactly the rows of that day."""
-    import contextlib
-    import io
-
-    from bag_parser_spark.sources.parquet import write_partitioned
-
-    e = load_table(spark, SF_CORRECT, "events").withColumn(
-        "event_date", F.to_date("ts")
-    )
-    out = str(tmp_path / "events_by_date")
-    write_partitioned(e, out, ["event_date"])
-
-    back = spark.read.parquet(out).filter(
-        F.col("event_date") == "2024-01-05"
-    )
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        back.explain("formatted")
-    plan = buf.getvalue()
-    assert "PartitionFilters" in plan
-    assert "event_date" in plan.split("PartitionFilters", 1)[1].split("]")[0]
-    assert (
-        back.count()
-        == e.filter(F.to_date("ts") == "2024-01-05").count()
-        > 0
-    )
-
-
-def test_dynamic_partition_overwrite_touches_only_its_partitions(
-    spark, tmp_path
-):
-    """Re-ingesting one day via dynamic overwrite replaces that day's
-    directory and leaves every other day byte-identical."""
-    from bag_parser_spark.sources.parquet import (
-        overwrite_partitions_dynamic,
-        write_partitioned,
-    )
-
-    e = load_table(spark, SF_CORRECT, "events").withColumn(
-        "event_date", F.to_date("ts")
-    )
-    out = str(tmp_path / "events_by_date")
-    write_partitioned(e, out, ["event_date"])
-
-    day = "2024-01-05"
-    fixed = (
-        e.filter(F.col("event_date") == day)
-        .withColumn("value", F.lit(-1.0))
-    )
-    overwrite_partitions_dynamic(fixed, out, ["event_date"])
-
-    back = spark.read.parquet(out)
-    # the re-ingested day carries the fix...
-    assert (
-        back.filter(F.col("event_date") == day)
-        .filter(F.col("value") != -1.0)
-        .count()
-        == 0
-    )
-    # ...and every other day is untouched
-    n_other = e.filter(F.col("event_date") != day).count()
-    assert back.filter(F.col("event_date") != day).count() == n_other
-    assert (
-        back.filter(F.col("event_date") != day)
-        .select("event_id", "value")
-        .exceptAll(
-            e.filter(F.col("event_date") != day).select("event_id", "value")
-        )
-        .count()
-        == 0
-    )
-
-
-def test_read_merged_schema_unions_generations(spark, tmp_path):
-    """Additive schema drift across file generations resolves to the
-    merged schema, old rows NULL-filled for the added column."""
-    from bag_parser_spark.sources.parquet import read_merged_schema
-
-    v1 = str(tmp_path / "gen1")
-    v2 = str(tmp_path / "gen2")
-    spark.createDataFrame(
-        [(1, "a"), (2, "b")], "id long, payload string"
-    ).write.parquet(v1)
-    spark.createDataFrame(
-        [(3, "c", 0.5)], "id long, payload string, score double"
-    ).write.parquet(v2)
-
-    merged = read_merged_schema(spark, v1, v2)
-    assert set(merged.columns) == {"id", "payload", "score"}
-    rows = {r["id"]: (r["payload"], r["score"]) for r in merged.collect()}
-    assert rows == {1: ("a", None), 2: ("b", None), 3: ("c", 0.5)}
-    # the default reader would have dropped the new column
-    plain = spark.read.parquet(v1, v2)
-    assert "score" not in plain.columns or set(plain.columns) == {
-        "id",
-        "payload",
-        "score",
-    }
-
-
 def test_audio_features_8bit_unsigned_recentering(spark):
     """8-bit WAV is unsigned (silence = 128): amplitude stats must
     recenter, or DC offset reads as signal."""
@@ -3060,18 +2957,17 @@ def test_bloom_bitmap_broadcast_path_matches_literal(spark):
 def test_fan_out_cpu_dense_guard(spark, monkeypatch):
     """The fan-out helper must repartition small inputs to the default
     parallelism, pass large inputs through UNTOUCHED (same plan object),
-    and honor the env kill-switch."""
-    from bag_parser_spark.operators.fanout import fan_out_cpu_dense
+    and treat a threshold of 0 as off."""
+    from bag_parser_spark.operators import fanout
     from bag_parser_spark.session import default_parallelism
 
     df = spark.range(100).selectExpr("id", "cast(id as string) s")
-    monkeypatch.delenv("SPARK_GRAFT_FANOUT_MAX_BYTES", raising=False)
-    out = fan_out_cpu_dense(df, "id")
+    out = fanout.fan_out_cpu_dense(df, "id")
     logical = out._jdf.queryExecution().logical().toString()
     assert f"RepartitionByExpression ['id], {default_parallelism()}" in logical
     # big input (estimate above threshold): untouched
-    monkeypatch.setenv("SPARK_GRAFT_FANOUT_MAX_BYTES", "1")
-    assert fan_out_cpu_dense(df, "id") is df
+    monkeypatch.setattr(fanout, "FANOUT_MAX_BYTES", 1)
+    assert fanout.fan_out_cpu_dense(df, "id") is df
     # kill-switch
-    monkeypatch.setenv("SPARK_GRAFT_FANOUT_MAX_BYTES", "0")
-    assert fan_out_cpu_dense(df, "id") is df
+    monkeypatch.setattr(fanout, "FANOUT_MAX_BYTES", 0)
+    assert fanout.fan_out_cpu_dense(df, "id") is df

@@ -7,13 +7,57 @@ from __future__ import annotations
 import pytest
 
 from bag_parser_spark.plans.catalog import registry
-from bag_parser_spark.streaming.events import run_stream_to_memory
+from bag_parser_spark.streaming.events import read_events_stream
 
 SF = "/root/testdata/sf0.01"
+EVENTS = f"{SF}/events.parquet"
+DRAIN_TIMEOUT_S = 600
+
+
+def _drain(stream, *, name=None, path=None, batch=None, checkpoint=None,
+           mode="append"):
+    """Run ``stream`` with Trigger.AvailableNow until its input is drained
+    (at most ``DRAIN_TIMEOUT_S``), into the foreachBatch function
+    ``batch``, the parquet directory ``path`` or else the memory table
+    ``name``."""
+    w = stream.writeStream.outputMode(mode)
+    if checkpoint:
+        w = w.option("checkpointLocation", checkpoint)
+    if batch is not None:
+        w = w.foreachBatch(batch)
+    elif path is not None:
+        w = w.format("parquet").option("path", path)
+    else:
+        w = w.format("memory").queryName(name)
+    q = w.trigger(availableNow=True).start()
+    try:
+        assert q.awaitTermination(DRAIN_TIMEOUT_S), "stream did not drain"
+    finally:
+        q.stop()
+
+
+def _errors_and_purchases(ev):
+    """The two sides of the interval-join twins: error events on the
+    left, purchase events on the right."""
+    from pyspark.sql import functions as F
+
+    left = ev.filter(F.col("event_type") == "error").select(
+        "event_id", "user_id", "ts"
+    )
+    right = ev.filter(F.col("event_type") == "purchase").select(
+        "user_id", "ts", "event_id", "value"
+    )
+    return left, right
 
 
 def test_stream_matches_batch(spark):
-    run_stream_to_memory(spark, f"{SF}/events.parquet", "ev_win_test")
+    from bag_parser_spark.streaming.events import windowed_event_counts
+
+    _drain(
+        windowed_event_counts(read_events_stream(spark, EVENTS)),
+        name="ev_win_test",
+        mode="complete",
+    )
     stream_rows = {
         (r["window_start"], r["event_type"]): (r["n_events"], r["total_value"])
         for r in spark.table("ev_win_test").collect()
@@ -37,11 +81,19 @@ def test_sessionize_stream_matches_batch(spark):
     from pyspark.sql import functions as F
 
     from bag_parser_spark.streaming.sessionize import (
-        run_sessionize_to_memory,
         sessionize_batch,
+        sessionize_stream,
     )
 
-    run_sessionize_to_memory(spark, f"{SF}/events.parquet", "ev_sess_test")
+    _drain(
+        sessionize_stream(
+            read_events_stream(spark, EVENTS).select(
+                "user_id", "ts", "event_id", "value"
+            ),
+            gap_minutes=360,
+        ),
+        name="ev_sess_test",
+    )
     stream_rows = {
         (r["user_id"], r["session_start"]): (
             r["session_end"],
@@ -96,7 +148,6 @@ def test_countmin_stream_partials_match_batch_and_survive_replay(
     from bag_parser_spark.streaming.sketches import (
         countmin_partials_writer,
         read_merged_sketch,
-        run_countmin_stream,
     )
 
     src = tmp_path / "evsrc"
@@ -110,7 +161,14 @@ def test_countmin_stream_partials_match_batch_and_survive_replay(
             for r in read_merged_sketch(spark, out).collect()
         }
 
-    run_countmin_stream(spark, str(src), out, ck)
+    def drain():
+        _drain(
+            read_events_stream(spark, str(src)),
+            batch=countmin_partials_writer(out, "user_id", 3, 256),
+            checkpoint=ck,
+        )
+
+    drain()
     ev = load_table(spark, SF, "events")
     direct = {
         (r["row"], r["pos"]): r["cell"]
@@ -121,7 +179,7 @@ def test_countmin_stream_partials_match_batch_and_survive_replay(
     # a new file arrives -> the next micro-batch appends its OWN partial;
     # the merged sketch is the sum (here: every cell doubles)
     shutil.copy(f"{SF}/events.parquet", src / "c2.parquet")
-    run_countmin_stream(spark, str(src), out, ck)
+    drain()
     assert merged() == {k: 2 * v for k, v in direct.items()}
 
     # replayed micro-batch: foreachBatch re-delivers the same batch_id
@@ -162,7 +220,7 @@ def test_dedup_stream_matches_batch(spark):
     from pyspark.sql import functions as F
 
     from bag_parser_spark.sources.parquet import load_table
-    from bag_parser_spark.streaming.events import run_dedup_stream_to_memory
+    from bag_parser_spark.streaming.events import dedup_events_stream
 
     base = load_table(spark, SF, "events").select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
@@ -174,7 +232,10 @@ def test_dedup_stream_matches_batch(spark):
         nanos = F.unix_micros(F.col("ts").cast("timestamp")) * 1000
         base.withColumn("ts", nanos).write.parquet(dup_dir)
         base.withColumn("ts", nanos).write.mode("append").parquet(dup_dir)
-        run_dedup_stream_to_memory(spark, dup_dir, "events_deduped_t")
+        _drain(
+            dedup_events_stream(read_events_stream(spark, dup_dir)),
+            name="events_deduped_t",
+        )
         got = spark.table("events_deduped_t")
         assert got.count() == base.count()
         assert got.select("event_id").distinct().count() == base.count()
@@ -194,9 +255,10 @@ def test_interval_join_stream_matches_batch(spark):
     batch twin's pairs: with AvailableNow draining a finite file source,
     every match is within the watermark by end-of-input, so the inner
     join's emission is complete — set-equality, not containment."""
-    from bag_parser_spark.streaming.events import run_interval_join_to_memory
+    from bag_parser_spark.streaming.events import interval_join_stream
 
-    run_interval_join_to_memory(spark, f"{SF}/events.parquet", "ev_ij_test")
+    left, right = _errors_and_purchases(read_events_stream(spark, EVENTS))
+    _drain(interval_join_stream(left, right), name="ev_ij_test")
     stream_rows = {
         (r["event_id"], r["r_event_id"]): (r["ts"], r["r_ts"], r["r_value"])
         for r in spark.table("ev_ij_test").collect()
@@ -213,14 +275,15 @@ def test_interval_join_stream_matches_batch(spark):
 def test_exactly_once_sink_replay_idempotent(spark, tmp_path):
     """At-least-once replay of a micro-batch must not duplicate rows:
     the idempotent writer overwrites the batch's own partition."""
-    from bag_parser_spark.streaming.sinks import (
-        idempotent_batch_writer,
-        run_events_to_parquet_exactly_once,
-    )
+    from bag_parser_spark.streaming.sinks import idempotent_batch_writer
 
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
-    run_events_to_parquet_exactly_once(spark, f"{SF}/events.parquet", out, ckpt)
+    _drain(
+        read_events_stream(spark, EVENTS),
+        batch=idempotent_batch_writer(out),
+        checkpoint=ckpt,
+    )
     n_src = spark.read.parquet(f"{SF}/events.parquet").count()
     first = spark.read.parquet(out)
     assert first.count() == n_src
@@ -241,9 +304,17 @@ def test_enrich_stream_matches_batch(spark):
     """Stream-static enrichment: the drained stream must emit exactly the
     batch twin's rows (stateless joins — no watermark semantics to
     complicate parity; a finite file source drains completely)."""
-    from bag_parser_spark.streaming.events import run_enrich_stream_to_memory
+    from bag_parser_spark.sources.parquet import load_table
+    from bag_parser_spark.streaming.events import enrich_events_stream
 
-    run_enrich_stream_to_memory(spark, f"{SF}/events.parquet", SF, "ev_enr_test")
+    _drain(
+        enrich_events_stream(
+            read_events_stream(spark, EVENTS),
+            load_table(spark, SF, "customer"),
+            load_table(spark, SF, "nation"),
+        ),
+        name="ev_enr_test",
+    )
     cols = ["event_id", "user_id", "event_type", "value", "c_name", "nation_name"]
     stream_rows = {tuple(r[c] for c in cols) for r in spark.table("ev_enr_test").collect()}
     batch = registry()["events_stream_enrich"].fn(spark, SF)
@@ -260,10 +331,7 @@ def test_native_session_window_stream_matches_batch(spark):
     hasn't sealed), value-equal on every emitted row."""
     from pyspark.sql import functions as F
 
-    from bag_parser_spark.plans.catalog import registry
-    from bag_parser_spark.streaming.events import read_events_stream
-
-    ev = read_events_stream(spark, f"{SF}/events.parquet")
+    ev = read_events_stream(spark, EVENTS)
     agg = (
         ev.withWatermark("ts", "1 minute")
         .groupBy(F.session_window("ts", "360 minutes"), F.col("user_id"))
@@ -281,14 +349,7 @@ def test_native_session_window_stream_matches_batch(spark):
             "total_value",
         )
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("ev_sw_native")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(agg, name="ev_sw_native")
     stream_rows = {
         (r["user_id"], r["session_start"]): (
             r["session_end"],
@@ -323,7 +384,6 @@ def test_stream_checkpoint_recovery_no_reprocessing(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from bag_parser_spark.sources.parquet import load_table
-    from bag_parser_spark.streaming.events import read_events_stream
 
     src = str(tmp_path / "src")
     out = str(tmp_path / "out")
@@ -334,16 +394,13 @@ def test_stream_checkpoint_recovery_no_reprocessing(spark, tmp_path):
     base.write.parquet(src)
 
     def drain():
-        q = (
-            read_events_stream(spark, src)
-            .select("event_id", "user_id", "event_type", "value")
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", cp)
-            .trigger(availableNow=True)
-            .start()
+        _drain(
+            read_events_stream(spark, src).select(
+                "event_id", "user_id", "event_type", "value"
+            ),
+            path=out,
+            checkpoint=cp,
         )
-        q.awaitTermination()
 
     drain()  # first launch: processes the initial files
     assert spark.read.parquet(out).count() == n
@@ -367,10 +424,7 @@ def test_native_hopping_window_stream_matches_batch(spark):
     test."""
     from pyspark.sql import functions as F
 
-    from bag_parser_spark.plans.catalog import registry
-    from bag_parser_spark.streaming.events import read_events_stream
-
-    ev = read_events_stream(spark, f"{SF}/events.parquet")
+    ev = read_events_stream(spark, EVENTS)
     agg = (
         ev.withWatermark("ts", "1 minute")
         .groupBy(
@@ -389,14 +443,7 @@ def test_native_hopping_window_stream_matches_batch(spark):
             "total_value",
         )
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("ev_hop_native")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(agg, name="ev_hop_native")
     stream_rows = {
         (r["window_start"], r["event_type"]): (r["n_events"], r["total_value"])
         for r in spark.table("ev_hop_native").collect()
@@ -418,9 +465,13 @@ def test_ohlc_stream_matches_batch(spark):
     open/high/low/close/n_events exactly (pure selections — no float
     accumulation), volume to 1e-6 (double sums re-associate between the
     stream's state-store merges and the batch partial aggregation)."""
-    from bag_parser_spark.streaming.events import run_ohlc_stream_to_memory
+    from bag_parser_spark.streaming.events import ohlc_stream
 
-    run_ohlc_stream_to_memory(spark, f"{SF}/events.parquet", "ev_ohlc_test")
+    _drain(
+        ohlc_stream(read_events_stream(spark, EVENTS)),
+        name="ev_ohlc_test",
+        mode="complete",
+    )
     stream_rows = {
         (r["bar_start"], r["event_type"]): r
         for r in spark.table("ev_ohlc_test").collect()
@@ -451,12 +502,11 @@ def test_interval_join_outer_stream_matches_batch(spark):
 
     from bag_parser_spark.sources.parquet import load_table
     from bag_parser_spark.streaming.events import (
-        run_interval_join_outer_to_memory,
+        interval_join_stream_left_outer,
     )
 
-    run_interval_join_outer_to_memory(
-        spark, f"{SF}/events.parquet", "ev_ijo_test"
-    )
+    left, right = _errors_and_purchases(read_events_stream(spark, EVENTS))
+    _drain(interval_join_stream_left_outer(left, right), name="ev_ijo_test")
     out = spark.table("ev_ijo_test").collect()
     stream_matched = {
         (r["event_id"], r["r_event_id"]) for r in out
@@ -496,8 +546,6 @@ def test_read_events_stream_rejects_mixed_ts_encodings(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
     import pytest
-
-    from bag_parser_spark.streaming.events import read_events_stream
 
     cols = {
         "event_id": pa.array([1], pa.int64()),

@@ -254,7 +254,7 @@ def test_read_wet_roundtrip_and_front_half(spark, tmp_path):
 
 def test_read_wat_links_roundtrip(spark, tmp_path):
     """WAT sidecar: 'metadata' records carrying the crawl-side JSON
-    envelope. wat_to_links parses the envelope JVM-side with the
+    envelope. wat_links_frame parses the envelope JVM-side with the
     pruned schema, explodes the harvested links, and resolves each
     href against the page URL with the same resolve_link contract as
     the HTML path — absolute pass-through, root-relative joins
@@ -329,7 +329,7 @@ def test_read_wat_links_roundtrip(spark, tmp_path):
     (d / "seg0.warc.wat.gz").write_bytes(
         warc.build_warc_bytes(records, per_record_gzip=True)
     )
-    all_rows = warc.wat_to_links(spark, str(d)).collect()
+    all_rows = warc.wat_links_frame(warc.read_wat(spark, str(d))).collect()
     rows = [r for r in all_rows
             if r["url"] == "https://www.Site1.com/a/page.html"]
     got = {r["link_no"]: r for r in rows}

@@ -30,7 +30,8 @@ def parse_xml_records(
     parents), repeated tags comma-joined (S4), geometry chunks
     bracket-wrapped at parse time (P9).
     """
-    record = dict(entity.defaults)
+    columns = set(entity.fields.values()) | set(entity.parent_fields.values())
+    record = dict.fromkeys(columns, "")
     stack: list[str] = []
     for event, elem in ElementTree.iterparse(io.BytesIO(payload), ("start", "end")):
         if event == "start":
@@ -39,7 +40,7 @@ def parse_xml_records(
         stack.pop()
         if elem.tag == entity.object_tag:
             yield record
-            record = dict(entity.defaults)
+            record = dict.fromkeys(columns, "")
             elem.clear()
             continue
         column = None
