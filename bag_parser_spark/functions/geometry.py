@@ -62,7 +62,9 @@ def geometry_to_wgs_geojson(geometry: Column, is_3d: bool) -> Column:
 
 def first_pos_of_geometry(geometry: Column) -> Column:
     """U3/P7: first 'x y' pair of '[x y z …]' (reference
-    bag_parser.py:137-143 takes text up to the second space)."""
+    bag_parser.py:137-143 takes text up to the second space). An empty
+    geometry gives '' (``F.get`` is NULL past the end, where ``[1]``
+    raises under ANSI mode)."""
     stripped = F.regexp_replace(geometry, r"^\[", "")
     parts = F.split(stripped, " ")
-    return F.concat_ws(" ", parts[0], parts[1])
+    return F.concat_ws(" ", parts[0], F.get(parts, 1))

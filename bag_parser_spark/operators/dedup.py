@@ -20,7 +20,6 @@ def last_write_wins(
     df: DataFrame,
     keys: Sequence[str],
     order_by: Sequence[Column],
-    keep: str = "last",
 ) -> DataFrame:
     """W1/S7: keep one row per key, latest by ``order_by`` (REPLACE INTO
     semantics, reference database_sqlite.py:98-162 and the "only last one
@@ -30,8 +29,7 @@ def last_write_wins(
     (add a tiebreaker column!) or results are nondeterministic under retry —
     exactly the trap the reference's insertion-order dependence hides.
     """
-    ordering = [c.desc() if keep == "last" else c.asc() for c in order_by]
-    w = Window.partitionBy(*keys).orderBy(*ordering)
+    w = Window.partitionBy(*keys).orderBy(*[c.desc() for c in order_by])
     return (
         df.withColumn("__rn__", F.row_number().over(w))
         .filter(F.col("__rn__") == 1)

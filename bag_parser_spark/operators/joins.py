@@ -28,7 +28,6 @@ def chained_left_join(
         tuple[DataFrame, Column | str | list[str]]
         | tuple[DataFrame, Column | str | list[str], bool]
     ],
-    broadcast_dims: bool = True,
 ) -> DataFrame:
     """J1/J9: fact LEFT JOIN dim1 LEFT JOIN dim2 … (reference
     database_sqlite.py:347-375, exporter.py:52-73).
@@ -45,8 +44,7 @@ def chained_left_join(
     out = fact
     for spec in dims:
         dim, on = spec[0], spec[1]
-        bcast = spec[2] if len(spec) > 2 else broadcast_dims
-        right = F.broadcast(dim) if bcast else dim
+        right = F.broadcast(dim) if len(spec) < 3 or spec[2] else dim
         out = out.join(right, on=on, how="left")
     return out
 
@@ -56,14 +54,13 @@ def update_join(
     source: DataFrame,
     on: Column | str | list[str],
     set_cols: dict[str, Column],
-    when_matched_only: bool = True,
 ) -> DataFrame:
     """J2/J3/J6: UPDATE target SET col = source.expr FROM source WHERE match
     (reference database_sqlite.py:79-85, 440-464, 522-530).
 
     ``set_cols`` maps target column name → replacement Column (may reference
-    source columns). When ``when_matched_only``, unmatched target rows keep
-    their original value (left join + conditional overwrite); the source must
+    source columns). Unmatched target rows keep their original value (left
+    join + conditional overwrite); the source must
     be unique on the join key or the update is ambiguous (the reference
     inherits SQLite's pick-one behavior; we require pre-deduped sources).
     """
@@ -71,12 +68,9 @@ def update_join(
     joined = target.join(src, on=on, how="left")
     out = joined
     for name, expr in set_cols.items():
-        if when_matched_only:
-            out = out.withColumn(
-                name, F.when(F.col("__matched__").isNotNull(), expr).otherwise(F.col(name))
-            )
-        else:
-            out = out.withColumn(name, expr)
+        out = out.withColumn(
+            name, F.when(F.col("__matched__").isNotNull(), expr).otherwise(F.col(name))
+        )
     drop = [c for c in src.columns if c not in target.columns]
     return out.drop(*drop)
 

@@ -40,14 +40,16 @@ from bag_parser_spark.functions import geometry as G
 from bag_parser_spark.functions import rijksdriehoek as RD
 from bag_parser_spark.functions import scalars
 from bag_parser_spark.operators.dedup import last_write_wins
-from bag_parser_spark.sources.bag_schemas import ENTITIES, EntityConfig
+from bag_parser_spark.sources.bag_schemas import (
+    ENTITIES,
+    NAMESPACES,
+    EntityConfig,
+)
 
 
 def _raw_schema(entity: EntityConfig) -> T.StructType:
-    cols = sorted(set(entity.fields.values())
-                  | set(entity.parent_fields.values()))
     return T.StructType(
-        [T.StructField(c, T.StringType()) for c in cols]
+        [T.StructField(c, T.StringType()) for c in sorted(entity.columns)]
         + [
             T.StructField("__file__", T.StringType()),
             T.StructField("__ordinal__", T.LongType()),
@@ -55,125 +57,41 @@ def _raw_schema(entity: EntityConfig) -> T.StructType:
     )
 
 
-_NS_PREFIX = {
-    # literal prefix per namespace URI, as written in Kadaster deliveries.
-    # The scan matches QUALIFIED NAMES AS WRITTEN (Spark's XML source is
-    # not namespace-aware) — fine for LVBAG, whose deliveries use these
-    # fixed prefixes; _check_namespace_prefixes rejects files that bind
-    # these URIs otherwise instead of letting them scan as zero rows.
-    "{www.kadaster.nl/schemas/lvbag/imbag/objecten/v20200601}": "Objecten",
-    "{www.kadaster.nl/schemas/lvbag/imbag/objecten-ref/v20200601}": "Objecten-ref",
-    "{www.kadaster.nl/schemas/lvbag/imbag/historie/v20200601}": "Historie",
-    "{www.kadaster.nl/schemas/lvbag/imbag/nen5825/v20200601}": "nen5825",
-    "{http://www.opengis.net/gml/3.2}": "gml",
-    "{www.kadaster.nl/schemas/lvbag/gem-wpl-rel/gwr-producten-lvc/v20200601}": "gwr",
-    "{www.kadaster.nl/schemas/lvbag/gem-wpl-rel/bag-types/v20200601}": "bagtypes",
-}
+def _read_schema(entity: EntityConfig) -> T.StructType:
+    """Explicit all-string read schema for the XML source: the entity's
+    tag paths merged into one tree. Every element is an array (repeated
+    tags arrive as N elements, single tags as 1 — comma-joined
+    afterwards, the S4 rule): array<string> at a leaf, array<struct<…>>
+    for a wrapper."""
+    tree: dict = {}
+    for paths in entity.columns.values():
+        for path in paths:
+            *wrappers, leaf = path.split("/")
+            node = tree
+            for tag in wrappers:
+                node = node.setdefault(tag, {})
+            node.setdefault(leaf, None)
+
+    def element(node: dict | None) -> T.ArrayType:
+        if node is None:
+            return T.ArrayType(T.StringType())
+        return T.ArrayType(T.StructType(
+            [T.StructField(tag, element(child)) for tag, child in node.items()]
+        ))
+
+    return element(tree).elementType
 
 
-def _prefixed(qtag: str) -> str:
-    for ns, prefix in _NS_PREFIX.items():
-        if qtag.startswith(ns):
-            return f"{prefix}:{qtag[len(ns):]}"
-    raise ValueError(f"unknown namespace in tag {qtag!r}")
-
-
-def _split_parent_key(key: str) -> tuple[str, str]:
-    # parent_fields keys are "{nsP}parent{nsC}child" — split at the
-    # second namespace brace
-    i = key.find("{", 1)
-    return key[:i], key[i:]
-
-
-# Known LVBAG wrapper elements whose CHILD a namespace-aware parser would
-# match at depth (keyed on the child tag alone) but the XML scan must
-# declare structurally: entity → list of (wrapper StructField, target
-# column, extractor(df) -> array<string> of the nested values). These
-# cover the real-delivery VBO layout (PandRef inside maaktDeelUitVan,
-# point inside geometrie/gml:Point) next to the flat layout the
-# pre-extracted fixtures use; a record mixing BOTH layouts for one
-# column would comma-join flat values before nested ones (real
-# deliveries use exactly one form per record).
-def _vbo_wrappers():
-    deel = T.StructField(
-        "Objecten:maaktDeelUitVan",
-        T.ArrayType(
-            T.StructType(
-                [
-                    T.StructField(
-                        "Objecten-ref:PandRef",
-                        T.ArrayType(T.StringType()),
-                    )
-                ]
-            )
-        ),
-    )
-    geom = T.StructField(
-        "Objecten:geometrie",
-        T.StructType(
-            [
-                T.StructField(
-                    "gml:Point",
-                    T.StructType([T.StructField("gml:pos", T.StringType())]),
-                )
-            ]
-        ),
-    )
-
-    def deel_extract(df):
-        refs = F.flatten(
-            F.filter(
-                F.transform(
-                    F.col("`Objecten:maaktDeelUitVan`"),
-                    lambda x: x["Objecten-ref:PandRef"],
-                ),
-                lambda x: x.isNotNull(),
-            )
-        )
-        return F.coalesce(refs, F.array().cast("array<string>"))
-
-    def geom_extract(df):
-        pos = F.col("`Objecten:geometrie`")["gml:Point"]["gml:pos"]
-        return F.filter(F.array(pos), lambda x: x.isNotNull())
-
-    return [(deel, "pand_id", deel_extract), (geom, "pos", geom_extract)]
-
-
-_NATIVE_WRAPPERS = {"Verblijfsobject": _vbo_wrappers}
-
-
-def _native_schema(entity: EntityConfig) -> T.StructType:
-    """Explicit all-string read schema for the XML source. Every simple
-    field is array<string> (repeated tags arrive as N elements, single
-    tags as 1 — comma-joined afterwards, the S4 rule); every
-    parent_fields parent is array<struct<child: string>> (S3); plus the
-    entity's known wrapper elements (_NATIVE_WRAPPERS)."""
-    fields = [
-        T.StructField(_prefixed(qtag), T.ArrayType(T.StringType()))
-        for qtag in entity.fields
-    ]
-    parents: dict[str, list[str]] = {}
-    for key in entity.parent_fields:
-        parent, child = _split_parent_key(key)
-        parents.setdefault(parent, []).append(child)
-    fields += [
-        T.StructField(
-            _prefixed(parent),
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField(_prefixed(c), T.StringType())
-                        for c in children
-                    ]
-                )
-            ),
-        )
-        for parent, children in parents.items()
-    ]
-    fields += [
-        sf for sf, _, _ in _NATIVE_WRAPPERS.get(entity.tag, lambda: [])()
-    ]
-    return T.StructType(fields)
+def _path_values(path: str) -> Column:
+    """array<string> of the values at one tag path, in document order;
+    NULL when the path's first element is absent."""
+    first, *rest = path.split("/")
+    values = F.col(f"`{first}`")
+    for tag in rest:
+        values = F.flatten(F.filter(
+            F.transform(values, lambda x: x[tag]), lambda x: x.isNotNull()
+        ))
+    return values
 
 
 def extract_bag_delivery(path: str, dest_dir: str) -> str:
@@ -306,7 +224,7 @@ def _root_namespaces(path: str) -> dict[str, str]:
     return found
 
 
-_PREFIX_BY_URI = {ns[1:-1]: prefix for ns, prefix in _NS_PREFIX.items()}
+_PREFIX_BY_URI = {uri: prefix for prefix, uri in NAMESPACES.items()}
 
 
 def _check_namespace_prefixes(xmls: list[str]) -> None:
@@ -340,9 +258,8 @@ def read_bag_entity_raw_native(
       it first (``extract_bag_delivery``; ``import_bag`` does this).
     - LVBAG namespace URIs bound to their usual prefixes
       (``_check_namespace_prefixes``).
-    - entity tags as direct children of the object element, plus the
-      real-delivery nested wrappers declared in ``_NATIVE_WRAPPERS``
-      (VBO maaktDeelUitVan/PandRef and geometrie/gml:Point/gml:pos).
+    - a value is read only at the tag paths declared in
+      ``EntityConfig.columns`` (flat and real-delivery nested layouts).
     - ``__ordinal__`` is ``monotonically_increasing_id()``: the XML source
       never splits a file across partitions (unlike ``text``, whatever
       ``spark.sql.files.maxPartitionBytes`` says), so within one file the
@@ -370,45 +287,22 @@ def read_bag_entity_raw_native(
 
     df = (
         spark.read.format("xml")
-        .option("rowTag", _prefixed(entity.object_tag))
-        .schema(_native_schema(entity))
+        .option("rowTag", entity.tag)
+        .schema(_read_schema(entity))
         .load(xmls)
     )
-    cols = {}  # column name → array<string> expression, joined below
-    for qtag, colname in entity.fields.items():
-        arr = F.col(f"`{_prefixed(qtag)}`")
-        if colname == "geometry" and entity.has_geometry:
+    empty = F.array().cast("array<string>")
+    out = []
+    for c in sorted(entity.columns):
+        arrays = [_path_values(p) for p in entity.columns[c]]
+        values = (
+            arrays[0] if len(arrays) == 1
+            else F.concat(*[F.coalesce(a, empty) for a in arrays])
+        )
+        if c == "geometry":
             # P9 bracket wrap per occurrence
-            arr = F.transform(
-                arr, lambda x: F.concat(F.lit("["), x, F.lit("]"))
-            )
-        cols[colname] = arr
-    for key, colname in entity.parent_fields.items():
-        parent, child = _split_parent_key(key)
-        member = _prefixed(child)
-        arr = F.filter(
-            F.transform(
-                F.col(f"`{_prefixed(parent)}`"), lambda x: x[member]
-            ),
-            lambda x: x.isNotNull(),
-        )
-        cols[colname] = arr
-    for _, colname, extract in _NATIVE_WRAPPERS.get(
-        entity.tag, lambda: []
-    )():
-        empty = F.array().cast("array<string>")
-        cols[colname] = F.concat(
-            F.coalesce(cols[colname], empty) if colname in cols else empty,
-            F.coalesce(extract(df), empty),
-        )
-    target = _raw_schema(entity)
-    out = [
-        F.coalesce(F.array_join(cols[c], ","), F.lit("")).alias(c)
-        if c in cols
-        else F.lit("").alias(c)
-        for c in target.fieldNames()
-        if c not in ("__file__", "__ordinal__")
-    ]
+            values = F.transform(values, scalars.bracket_wrap)
+        out.append(F.coalesce(F.array_join(values, ","), F.lit("")).alias(c))
     return df.select(
         *out,
         F.input_file_name().alias("__file__"),

@@ -78,46 +78,3 @@ def load_tables(
 ) -> dict[str, DataFrame]:
     return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}
 
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    out_path: str | None = None,
-) -> int:
-    """S10: small-file compaction — the engine's stand-in for the
-    reference's post-shrink ``VACUUM`` (reference utils_sqlite_shrink.py:
-    1-13, database_sqlite.py:51-52) and for Delta ``OPTIMIZE``.
-
-    Streaming sinks and fine-grained ingests leave thousands of tiny files;
-    at 100 TB the file-listing and per-file open costs dominate scans long
-    before the bytes do. Rewrites ``path`` (or writes to ``out_path``) as
-    ceil(total_bytes / target) files via a round-robin repartition — no
-    shuffle key, so data distributes evenly regardless of skew in the
-    original layout. Returns the output file count. Writing to a NEW
-    directory then swapping is the crash-safe pattern at scale (never
-    compact in place without a commit protocol); in-place here relies on
-    Spark's job-level atomic commit, matching the reference's
-    drop-then-VACUUM sequencing.
-    """
-    import math
-
-    from py4j.java_gateway import java_import
-
-    df = spark.read.parquet(path)
-    jvm = spark.sparkContext._jvm
-    java_import(jvm, "org.apache.hadoop.fs.Path")
-    hadoop_path = jvm.Path(path)
-    fs = hadoop_path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    total = sum(
-        f.getLen()
-        for f in fs.listStatus(hadoop_path)
-        if f.getPath().getName().endswith(".parquet")
-    )
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    dest = out_path or path
-    if dest == path:
-        # materialize before overwriting the input we are reading
-        df = df.localCheckpoint(eager=True)
-    df.repartition(n_files).write.mode("overwrite").parquet(dest)
-    return n_files

@@ -410,7 +410,6 @@ def synth_wat_record(doc_id: int) -> bytes:
 def generate_synthetic_warc(
     docs: DataFrame,
     n_files: int = 8,
-    doc_id_col: str = "doc_id",
     fmt: str = "warc",
 ) -> DataFrame:
     """(path, content) rows of synthetic WARC/WET/WAT files — one file
@@ -431,14 +430,14 @@ def generate_synthetic_warc(
     make_record = builders[fmt]
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(doc_id_col)
+        pdf = pdf.sort_values("doc_id")
         # Width contract with the DuckDB oracle (ADVICE r9): the record
         # id is zero-padded to EXACTLY 8 digits on both sides, but the
         # Python f'{:08d}' GROWS past 10^8 while the oracle's
         # lpad(..., 8, '0') TRUNCATES — record_id, record_length and
         # every downstream offset would silently diverge. Fail loudly
         # instead; a wider fixture needs both formats widened together.
-        top = int(pdf[doc_id_col].max())
+        top = int(pdf["doc_id"].max())
         if top >= 10**8:
             raise ValueError(
                 f"synthetic WARC fixture doc_id {top} >= 10^8 breaks the "
@@ -446,14 +445,14 @@ def generate_synthetic_warc(
             )
         f = int(pdf["__f__"].iloc[0])
         data = b"".join(
-            make_record(int(d)) for d in pdf[doc_id_col]
+            make_record(int(d)) for d in pdf["doc_id"]
         )
         return pd.DataFrame(
             {"path": [f"synthetic/{f:02d}.{fmt}"], "content": [data]}
         )
 
     return (
-        docs.select(doc_id_col, (F.col(doc_id_col) % n_files).alias("__f__"))
+        docs.select("doc_id", (F.col("doc_id") % n_files).alias("__f__"))
         .groupBy("__f__")
         .applyInPandas(build, schema="path string, content binary")
     )

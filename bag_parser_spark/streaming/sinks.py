@@ -16,9 +16,9 @@ replays the batch, the overwrite makes the replay a no-op. That pair is
 the distributed version of the reference's one-big-transaction commit.
 
 At 100 TB/day: partition by (batch_id) alone creates one directory per
-micro-batch — fine for audit/replay, but compact downstream (see
-sources/parquet.py:compact_parquet) or add a time column to the
-partition spec so consumers prune on event time, not arrival batch.
+micro-batch — fine for audit/replay, but compact downstream or add a
+time column to the partition spec so consumers prune on event time, not
+arrival batch.
 """
 
 from __future__ import annotations

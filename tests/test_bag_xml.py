@@ -478,32 +478,181 @@ def test_native_backend_parity_special_characters(spark, tmp_path):
     assert rows["scan"][1] == (1901, "Plaats <met> & rare tekens")
 
 
-def test_native_backend_parity_real_nested_vbo_layout(spark, tmp_path):
-    """The real delivery nests PandRef inside maaktDeelUitVan and the
-    point inside geometrie/gml:Point; the scan's schema must read both
-    (plus the flat layout) and agree with the reference on every column —
-    including the derived rd/wgs coordinates."""
-    d = tmp_path / "vbo_real"
-    d.mkdir()
-    (d / "9999VBO0001.xml").write_text(
+_VOORKOMEN = (
+    "<Objecten:voorkomen><Historie:Voorkomen>"
+    "<Historie:voorkomenidentificatie>1</Historie:voorkomenidentificatie>"
+    "<Historie:beginGeldigheid>2012-01-01</Historie:beginGeldigheid>"
+    "<Historie:eindGeldigheid>2030-01-01</Historie:eindGeldigheid>"
+    "</Historie:Voorkomen></Objecten:voorkomen>"
+)
+
+
+def _ring(coords, dim):
+    return (
+        f'<gml:LinearRing><gml:posList srsDimension="{dim}" '
+        f'count="{len(coords)}">'
+        + " ".join(" ".join(map(str, c)) for c in coords)
+        + "</gml:posList></gml:LinearRing>"
+    )
+
+
+def _polygon(dim, exterior, *interiors):
+    return (
+        "<Objecten:geometrie>"
+        f'<gml:Polygon srsName="urn:ogc:def:crs:EPSG::28992" srsDimension="{dim}">'
+        f"<gml:exterior>{_ring(exterior, dim)}</gml:exterior>"
+        + "".join(f"<gml:interior>{_ring(r, dim)}</gml:interior>"
+                  for r in interiors)
+        + "</gml:Polygon></Objecten:geometrie>"
+    )
+
+
+def _record(entity, body):
+    """One object element with the status the active filter keeps and the
+    numeric fields the typed projection casts."""
+    status, typed = {
+        "Woonplaats": ("Woonplaats aangewezen", ""),
+        "OpenbareRuimte": ("Naamgeving uitgegeven",
+                           "<Objecten-ref:WoonplaatsRef>1"
+                           "</Objecten-ref:WoonplaatsRef>"),
+        "Nummeraanduiding": ("Naamgeving uitgegeven",
+                             "<Objecten:huisnummer>1</Objecten:huisnummer>"),
+        "Pand": ("Pand in gebruik", "<Objecten:oorspronkelijkBouwjaar>1990"
+                 "</Objecten:oorspronkelijkBouwjaar>"),
+        "Verblijfsobject": ("Verblijfsobject in gebruik",
+                            "<Objecten:oppervlakte>80</Objecten:oppervlakte>"),
+    }.get(entity, ("Plaats aangewezen", ""))
+    return (
+        f"<Objecten:{entity}>"
+        "<Objecten:identificatie>1</Objecten:identificatie>"
+        f"<Objecten:status>{status}</Objecten:status>{typed}{body}"
+        f"</Objecten:{entity}>"
+    )
+
+
+_EXTERIOR_2D = [(120000.0, 450000.0), (120010.0, 450000.0),
+                (120010.0, 450010.0), (120000.0, 450000.0)]
+_EXTERIOR_3D = [(155000.0, 463000.0, 0.0), (155100.0, 463000.0, 0.0),
+                (155100.0, 463100.0, 0.0), (155000.0, 463000.0, 0.0)]
+_INTERIOR_3D = [(155010.0, 463010.0, 0.0), (155020.0, 463010.0, 0.0),
+                (155020.0, 463020.0, 0.0), (155010.0, 463010.0, 0.0)]
+_GEO_CFG = EngineConfig(active_only=True, parse_geometries=True,
+                        snapshot_date=SNAPSHOT)
+
+
+def _stand(record):
+    return VBO_HEAD + f"<sl:stand>{record}</sl:stand></sl:standBestand>"
+
+
+_NESTED_LAYOUTS = [
+    pytest.param(
+        "Verblijfsobject",
         _vbo_xml().replace(
             "<gml:pos>155000.0 463000.0 0.0</gml:pos>",
             "<Objecten:geometrie><gml:Point>"
             "<gml:pos>155000.0 463000.0 0.0</gml:pos>"
             "</gml:Point></Objecten:geometrie>",
         ),
-        encoding="utf-8",
+        CFG, {"pand_id": "PAND1,PAND2", "rd_x": 155000.0, "rd_y": 463000.0},
+        id="point-pandref-Verblijfsobject",
+    ),
+    pytest.param(
+        "Verblijfsobject",
+        _vbo_xml().replace(
+            "NUM2</Objecten-ref:NummeraanduidingRef>",
+            "NUM2</Objecten-ref:NummeraanduidingRef>"
+            "<Objecten-ref:NummeraanduidingRef>NUM4"
+            "</Objecten-ref:NummeraanduidingRef>",
+        ),
+        CFG, {"nevenadressen": "NUM2,NUM4,NUM3"},
+        id="two-refs-in-one-nevenadres-Verblijfsobject",
+    ),
+] + [
+    pytest.param(
+        entity, _stand(_record(entity, _VOORKOMEN)), CFG,
+        {"begindatum_geldigheid": "2012-01-01",
+         "einddatum_geldigheid": "2030-01-01"},
+        id=f"history-{entity}",
     )
-    path = str(d / "9999VBO*")
-    got = read_bag_entity(spark, path, "Verblijfsobject", CFG).collect()
-    want = read_reference_entity(
-        spark, path, "Verblijfsobject", CFG
-    ).collect()
+    for entity in ("Woonplaats", "OpenbareRuimte", "Nummeraanduiding",
+                   "Pand", "Verblijfsobject", "Ligplaats", "Standplaats")
+] + [
+    pytest.param(
+        entity,
+        _stand(_record(entity, "<Historie:beginGeldigheid>2012-01-01"
+                       "</Historie:beginGeldigheid>"
+                       + _polygon(2, _EXTERIOR_2D))),
+        _GEO_CFG, {"rd_x": 120000.0, "rd_y": 450000.0},
+        id=f"polygon-{entity}",
+    )
+    for entity in ("Ligplaats", "Standplaats")
+] + [
+    pytest.param(
+        "Pand",
+        _stand(_record("Pand", "<Historie:beginGeldigheid>2012-01-01"
+                       "</Historie:beginGeldigheid>"
+                       + _polygon(3, _EXTERIOR_3D, *interiors))),
+        _GEO_CFG, {"rings": 1 + len(interiors)},
+        id=f"polygon-Pand-{1 + len(interiors)}-rings",
+    )
+    for interiors in ((), (_INTERIOR_3D,))
+]
+
+
+@pytest.mark.parametrize("entity,doc,cfg,expect", _NESTED_LAYOUTS)
+def test_native_backend_parity_real_nested_vbo_layout(
+    spark, tmp_path, entity, doc, cfg, expect
+):
+    """Real deliveries nest what the pre-extracted fixtures keep flat: the
+    VBO point in geometrie/gml:Point and its PandRef in maaktDeelUitVan,
+    the validity dates in voorkomen/Voorkomen, the polygon rings in
+    geometrie/gml:Polygon/gml:exterior|gml:interior. The scan must agree
+    with the reference (which keys on the leaf tag at any depth) on every
+    column — rings in document order, derived rd/wgs coordinates too."""
+    import json
+
+    from bag_parser_spark.sources.bag_schemas import ENTITIES
+
+    code = ENTITIES[entity].file_code
+    (tmp_path / f"{code}0001.xml").write_text(doc, encoding="utf-8")
+    path = str(tmp_path / f"{code}*")
+    got = read_bag_entity(spark, path, entity, cfg).collect()
+    want = read_reference_entity(spark, path, entity, cfg).collect()
     assert len(got) == 1 and len(want) == 1
     assert got[0].asDict() == want[0].asDict()
-    r = got[0]
-    assert r["pand_id"] == "PAND1,PAND2"
-    assert r["rd_x"] == 155000.0 and r["rd_y"] == 463000.0
+    r = got[0].asDict()
+    expect = dict(expect)
+    n_rings = expect.pop("rings", None)
+    if n_rings:
+        rings = json.loads(r["geometry"])
+        assert len(rings) == n_rings
+        # the exterior ring comes first: it starts at the Amersfoort
+        # base point, the interior ring does not
+        lon, lat = rings[0][0]
+        assert abs(lat - 52.15517440) < 1e-9 and abs(lon - 5.38720621) < 1e-9
+        assert all(ring[0] != rings[0][0] for ring in rings[1:])
+    for k, v in expect.items():
+        assert r[k] == v, k
+
+
+def test_ligplaats_without_poslist_imports_with_null_coordinates(
+    spark, tmp_path
+):
+    """A Ligplaats with no readable posList imports with NULL rd/wgs
+    coordinates on both the scan and the reference, instead of failing the
+    position split (index 1 of a one-element array under ANSI mode)."""
+    (tmp_path / "9999LIG0001.xml").write_text(
+        _stand(_record("Ligplaats", "<Historie:beginGeldigheid>2012-01-01"
+                       "</Historie:beginGeldigheid>")),
+        encoding="utf-8",
+    )
+    path = str(tmp_path / "9999LIG*")
+    got = read_bag_entity(spark, path, "Ligplaats", CFG).collect()
+    want = read_reference_entity(spark, path, "Ligplaats", CFG).collect()
+    assert [r.asDict() for r in got] == [r.asDict() for r in want]
+    assert len(got) == 1
+    assert [got[0][c] for c in ("rd_x", "rd_y", "latitude", "longitude")] \
+        == [None] * 4
 
 
 def test_extract_bag_delivery_two_level_zip(spark, tmp_path):

@@ -428,23 +428,6 @@ def test_pack_sequences_stream_invariants(spark):
             offset += r["n_tokens"]
 
 
-def test_compact_parquet_reduces_files(spark, tmp_path):
-    import glob
-    import os
-
-    from bag_parser_spark.sources.parquet import compact_parquet
-
-    src = str(tmp_path / "frag")
-    # fragmented layout: 40 files for a tiny table
-    spark.range(10000).repartition(40).write.parquet(src)
-    assert len(glob.glob(os.path.join(src, "*.parquet"))) == 40
-    n = compact_parquet(spark, src, target_file_bytes=512 * 1024)
-    files = glob.glob(os.path.join(src, "*.parquet"))
-    assert len(files) == n and n < 40
-    # contents survive the rewrite
-    assert spark.read.parquet(src).count() == 10000
-
-
 def test_dup_clusters_long_chain_converges(spark):
     # 80-node chain: diameter 79 — plain hash-min would need 79 rounds;
     # path compression converges within the default max_iter
