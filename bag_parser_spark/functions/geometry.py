@@ -35,10 +35,13 @@ def ring_strings(geometry: Column) -> Column:
 
 def ring_to_points(ring: Column, is_3d: bool) -> Column:
     """'x y [z] x y [z] …' → array<array<double>> of [lon, lat] pairs
-    (z dropped, like the reference)."""
+    (z dropped, like the reference). An empty ring gives no points:
+    ``sequence(0, n)`` cut to its first n indices, since ``sequence(0, -1)``
+    counts down to ``[0, -1]``."""
     step = 3 if is_3d else 2
     nums = F.split(F.trim(ring), r"\s+")
-    idx = F.sequence(F.lit(0), (F.size(nums) / step).cast("int") - 1)
+    n = (F.size(nums) / step).cast("int")
+    idx = F.slice(F.sequence(F.lit(0), n), 1, n)
 
     def point(i: Column) -> Column:
         x = F.element_at(nums, i * step + 1).cast("double")

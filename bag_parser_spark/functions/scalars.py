@@ -112,9 +112,11 @@ def nullif_empty(c: Column) -> Column:
 
 def pos_to_rd(pos: Column) -> tuple[Column, Column]:
     """P8/U3: 'x y [z]' posList string → (rd_x, rd_y) doubles
-    (reference utils.py:196-198)."""
+    (reference utils.py:196-198). A one-number position gives a NULL
+    rd_y (``F.get`` is NULL past the end, where ``[1]`` raises under ANSI
+    mode)."""
     parts = F.split(pos, " ")
-    return parts[0].cast("double"), parts[1].cast("double")
+    return parts[0].cast("double"), F.get(parts, 1).cast("double")
 
 
 def bracket_wrap(c: Column) -> Column:

@@ -9,9 +9,14 @@ mapping:
   nummers ⋈ verblijfsobjecten, ~9.5M × 9M at NL scale, far larger on a
   training corpus) go sort-merge on the join key, and AQE converts to
   broadcast at runtime when a side turns out small.
-- Update-joins compose as DataFrame → DataFrame functions so the reference's
-  sequential UPDATE passes (database_sqlite.py:440-530) become one lineage —
-  Catalyst collapses the projections; ordering is preserved by construction.
+- Every update-join goes through ``update_join(target, source, key)``: the
+  caller builds a narrow source, unique on ``key``, whose other columns are
+  named after the target columns they write. Matched rows take the source
+  values (NULL included), unmatched rows keep theirs, and a source column
+  the target lacks is added (NULL where unmatched). The reference's
+  sequential UPDATE passes (database_sqlite.py:79-85, 398-530) compose as
+  DataFrame → DataFrame calls into one lineage — Catalyst collapses the
+  projections; ordering is preserved by construction.
 """
 
 from __future__ import annotations
@@ -49,30 +54,36 @@ def chained_left_join(
     return out
 
 
-def update_join(
-    target: DataFrame,
-    source: DataFrame,
-    on: Column | str | list[str],
-    set_cols: dict[str, Column],
-) -> DataFrame:
-    """J2/J3/J6: UPDATE target SET col = source.expr FROM source WHERE match
-    (reference database_sqlite.py:79-85, 440-464, 522-530).
+def update_join(target: DataFrame, source: DataFrame, key: str) -> DataFrame:
+    """J2-J6: UPDATE target SET c = source.c FROM source WHERE
+    target.key = source.key, for every non-key column c of ``source``
+    (reference database_sqlite.py:79-85, 398-530) — the one update-join.
 
-    ``set_cols`` maps target column name → replacement Column (may reference
-    source columns). Unmatched target rows keep their original value (left
-    join + conditional overwrite); the source must
-    be unique on the join key or the update is ambiguous (the reference
-    inherits SQLite's pick-one behavior; we require pre-deduped sources).
+    Matched rows take the source's value, NULL included; unmatched rows
+    keep their own. A source column the target lacks is added, NULL on
+    unmatched rows. The source must be unique on ``key`` (the reference
+    inherits SQLite's pick-one; callers dedupe first).
+
+    The key and the packed source row travel under private names; the
+    row is NULL exactly on unmatched rows, so it is the match flag, and
+    one projection does every overwrite. Packing keeps the source whole
+    under column pruning: a self-join branch that reads fewer of its
+    columns (``apply_nevenadressen``'s hoofd side) plans the same
+    broadcast and reuses it instead of building a pruned copy. A
+    ``F.broadcast(source)`` hint carries through the packing.
     """
-    src = source.withColumn("__matched__", F.lit(True))
-    joined = target.join(src, on=on, how="left")
-    out = joined
-    for name, expr in set_cols.items():
-        out = out.withColumn(
-            name, F.when(F.col("__matched__").isNotNull(), expr).otherwise(F.col(name))
-        )
-    drop = [c for c in src.columns if c not in target.columns]
-    return out.drop(*drop)
+    cols = [c for c in source.columns if c != key]
+    src = source.select(
+        F.col(key).alias("__uj_key__"), F.struct(*cols).alias("__uj_row__")
+    )
+    row = F.col("__uj_row__")
+    out = target.join(src, F.col(key) == F.col("__uj_key__"), "left")
+    return out.withColumns({
+        c: F.when(row.isNotNull(), row[c]).otherwise(F.col(c))
+        if c in target.columns
+        else row[c]
+        for c in cols
+    }).drop("__uj_key__", "__uj_row__")
 
 
 def conditional_orphan_delete(

@@ -11,9 +11,11 @@ Reference flow (import_bag.py:64-72 → database_sqlite.py:291-530):
   6. nevenadres propagation from hoofd rows                (J5)
   7. dummy-value cleaning + orphan delete                  (P11/P12)
 
-Each pass is a DataFrame → DataFrame function; the whole build is one lazy
-lineage, so Catalyst sees every stage at once (the reference's sequential
-UPDATE passes each rescan the table). Scale shape: nummers ⋈
+Each pass is a DataFrame → DataFrame function; passes 1 and 3-6 build a
+narrow source named after the columns they overwrite and hand it to
+``operators/joins.py::update_join``. The whole build is one lazy lineage,
+so Catalyst sees every stage at once (the reference's sequential UPDATE
+passes each rescan the table). Scale shape: nummers ⋈
 verblijfsobjecten is the one genuinely big-big join (~9.5M × 9M at NL
 scale; sort-merge on the key); every other side is a dim (broadcast) or a
 pre-aggregated overlay keyed by nummer_id.
@@ -25,8 +27,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bag_parser_spark.config import DEFAULT_CONFIG, EngineConfig
+from bag_parser_spark.functions.scalars import null_dummy
 from bag_parser_spark.operators.dedup import last_write_wins
-from bag_parser_spark.operators.joins import conditional_orphan_delete
+from bag_parser_spark.operators.joins import conditional_orphan_delete, update_join
 
 ADRESSEN_COLUMNS = [
     "nummer_id",
@@ -67,25 +70,13 @@ def enrich_woonplaatsen(
     (reference database_sqlite.py:79-85). The relation table is small —
     broadcast; must be unique per woonplaats_id (latest relation wins)."""
     gw = last_write_wins(
-        gemeente_woonplaatsen.select("woonplaats_id", "gemeente_id").filter(
-            F.col("woonplaats_id").isNotNull()
-        ),
-        keys=["woonplaats_id"],
+        gemeente_woonplaatsen.select(
+            F.col("woonplaats_id").alias("id"), "gemeente_id"
+        ).filter(F.col("id").isNotNull()),
+        keys=["id"],
         order_by=[F.col("gemeente_id")],
-    ).withColumnRenamed("gemeente_id", "__gw_gemeente_id__")
-    return (
-        woonplaatsen.join(
-            F.broadcast(gw), woonplaatsen["id"] == gw["woonplaats_id"], "left"
-        )
-        .withColumn(
-            "gemeente_id",
-            F.when(
-                F.col("__gw_gemeente_id__").isNotNull(),
-                F.col("__gw_gemeente_id__"),
-            ).otherwise(F.lit(None).cast("int")),
-        )
-        .drop("__gw_gemeente_id__", "woonplaats_id")
     )
+    return update_join(woonplaatsen, F.broadcast(gw), "id")
 
 
 def build_adressen_base(
@@ -147,36 +138,18 @@ def apply_meerdere_panden(
     stays NULL for these rows, exactly like the reference (the base join
     found no pand with the literal comma-list id)."""
     multi = verblijfsobjecten.filter(F.col("pand_id").contains(",")).select(
-        F.col("nummer_id").alias("__mp_nummer_id__"),
-        F.posexplode(F.split(F.col("pand_id"), ",")).alias(
-            "__mp_ord__", "__mp_pand_id__"
-        ),
+        "nummer_id",
+        F.posexplode(F.split(F.col("pand_id"), ",")).alias("ord", "pand_id"),
     )
     pj = multi.join(
-        panden.select(
-            F.col("id").alias("__mp_pid__"),
-            F.col("bouwjaar").alias("__mp_bouwjaar__"),
-            F.col("geometry").alias("__mp_geometry__"),
-        ),
-        F.col("__mp_pand_id__") == F.col("__mp_pid__"),
+        panden.select(F.col("id").alias("pand_id"), "bouwjaar", "geometry"),
+        "pand_id",
         "left",
     )
-    last = last_write_wins(
-        pj, keys=["__mp_nummer_id__"], order_by=[F.col("__mp_ord__")]
-    ).select(
-        "__mp_nummer_id__", "__mp_bouwjaar__", "__mp_geometry__",
-        F.lit(True).alias("__mp_matched__"),
+    last = last_write_wins(pj, keys=["nummer_id"], order_by=[F.col("ord")])
+    return update_join(
+        adressen, last.select("nummer_id", "bouwjaar", "geometry"), "nummer_id"
     )
-    out = adressen.join(
-        last, adressen["nummer_id"] == last["__mp_nummer_id__"], "left"
-    )
-    return out.withColumns({
-        c: F.when(F.col("__mp_matched__"), F.col(f"__mp_{c}__")).otherwise(
-            F.col(c)
-        )
-        for c in ("bouwjaar", "geometry")
-    }).drop("__mp_nummer_id__", "__mp_bouwjaar__", "__mp_geometry__",
-            "__mp_matched__")
 
 
 def apply_plaats_overlay(
@@ -186,34 +159,11 @@ def apply_plaats_overlay(
     object_type overwrite on matching nummer_id (reference
     database_sqlite.py:440-464)."""
     pl = plaatsen.select(
-        F.col("nummer_id").alias("__pl_nummer_id__"),
-        F.col("rd_x").alias("__pl_rd_x__"),
-        F.col("rd_y").alias("__pl_rd_y__"),
-        F.col("latitude").alias("__pl_lat__"),
-        F.col("longitude").alias("__pl_lon__"),
-        F.col("geometry").alias("__pl_geometry__"),
-    ).filter(_nonempty(F.col("__pl_nummer_id__")))
-    pl = last_write_wins(
-        pl, keys=["__pl_nummer_id__"], order_by=[F.col("__pl_rd_x__")]
-    ).withColumn("__pl_matched__", F.lit(True))
-    out = adressen.join(
-        pl, adressen["nummer_id"] == pl["__pl_nummer_id__"], "left"
-    )
-    overwrites = {
-        "rd_x": F.col("__pl_rd_x__"),
-        "rd_y": F.col("__pl_rd_y__"),
-        "latitude": F.col("__pl_lat__"),
-        "longitude": F.col("__pl_lon__"),
-        "geometry": F.col("__pl_geometry__"),
-        "object_type": F.lit(object_type),
-    }
-    out = out.withColumns({
-        name: F.when(F.col("__pl_matched__"), expr).otherwise(F.col(name))
-        for name, expr in overwrites.items()
-    })
-    return out.drop(
-        "__pl_nummer_id__", "__pl_rd_x__", "__pl_rd_y__", "__pl_lat__",
-        "__pl_lon__", "__pl_geometry__", "__pl_matched__"
+        "nummer_id", "rd_x", "rd_y", "latitude", "longitude", "geometry"
+    ).filter(_nonempty(F.col("nummer_id")))
+    pl = last_write_wins(pl, keys=["nummer_id"], order_by=[F.col("rd_x")])
+    return update_join(
+        adressen, pl.withColumn("object_type", F.lit(object_type)), "nummer_id"
     )
 
 
@@ -223,19 +173,10 @@ def apply_woonplaats_override(
     """Pass 5 (J6): nummer-level WoonplaatsRef beats the openbare ruimte's
     woonplaats (reference database_sqlite.py:522-530, `IS NOT ''`)."""
     n = nummers.filter(_nonempty(F.col("woonplaats_id"))).select(
-        F.col("id").alias("__ov_nummer_id__"),
-        F.col("woonplaats_id").cast("int").alias("__ov_woonplaats_id__"),
+        F.col("id").alias("nummer_id"),
+        F.col("woonplaats_id").cast("int").alias("woonplaats_id"),
     )
-    out = adressen.join(
-        F.broadcast(n), adressen["nummer_id"] == n["__ov_nummer_id__"], "left"
-    )
-    return out.withColumn(
-        "woonplaats_id",
-        F.when(
-            F.col("__ov_woonplaats_id__").isNotNull(),
-            F.col("__ov_woonplaats_id__"),
-        ).otherwise(F.col("woonplaats_id")),
-    ).drop("__ov_nummer_id__", "__ov_woonplaats_id__")
+    return update_join(adressen, F.broadcast(n), "nummer_id")
 
 
 NEVEN_INHERITED = [
@@ -260,42 +201,18 @@ def apply_nevenadressen(
     Joins the *current* adressen state (after passes 3-5), matching the
     reference's pass ordering. Pairs are deduped per neven id (the
     reference's temp-table PK would abort on duplicates)."""
-    pairs = (
-        verblijfsobjecten.filter(_nonempty(F.col("nevenadressen")))
-        .select(
-            F.col("nummer_id").alias("__hoofd_id__"),
-            F.explode(F.split(F.col("nevenadressen"), ",")).alias("__neven_id__"),
-        )
+    pairs = verblijfsobjecten.filter(_nonempty(F.col("nevenadressen"))).select(
+        F.col("nummer_id").alias("hoofd_nummer_id"),
+        F.explode(F.split(F.col("nevenadressen"), ",")).alias("nummer_id"),
     )
     pairs = last_write_wins(
-        pairs, keys=["__neven_id__"], order_by=[F.col("__hoofd_id__")]
+        pairs, keys=["nummer_id"], order_by=[F.col("hoofd_nummer_id")]
     )
     hoofd = adressen.select(
-        F.col("nummer_id").alias("__h_nummer_id__"),
-        *[F.col(c).alias(f"__h_{c}__") for c in NEVEN_INHERITED],
+        F.col("nummer_id").alias("hoofd_nummer_id"), *NEVEN_INHERITED
     )
-    overlay = pairs.join(
-        hoofd, F.col("__hoofd_id__") == F.col("__h_nummer_id__"), "left"
-    ).select(
-        "__neven_id__", "__hoofd_id__",
-        *[F.col(f"__h_{c}__") for c in NEVEN_INHERITED],
-    )
-    out = adressen.join(
-        overlay, adressen["nummer_id"] == overlay["__neven_id__"], "left"
-    )
-    is_neven = F.col("__neven_id__").isNotNull()
-    out = out.withColumns({
-        "hoofd_nummer_id": F.when(is_neven, F.col("__hoofd_id__")).otherwise(
-            F.col("hoofd_nummer_id")
-        ),
-        **{
-            c: F.when(is_neven, F.col(f"__h_{c}__")).otherwise(F.col(c))
-            for c in NEVEN_INHERITED
-        },
-    })
-    return out.drop(
-        "__neven_id__", "__hoofd_id__",
-        *[f"__h_{c}__" for c in NEVEN_INHERITED],
+    return update_join(
+        adressen, pairs.join(hoofd, "hoofd_nummer_id", "left"), "nummer_id"
     )
 
 
@@ -311,13 +228,10 @@ def clean_adressen(
     openbare_ruimte_id; one left_anti count against the broadcast ids
     counts both kinds, and is the one driver-side action in the build."""
     out = adressen.withColumns({
-        "bouwjaar": F.when(
-            (F.col("bouwjaar") == 1005) | (F.col("bouwjaar") > 2040),
-            F.lit(None),
-        ).otherwise(F.col("bouwjaar")),
-        "oppervlakte": F.when(
-            F.col("oppervlakte").isin(999999.0, 1.0), F.lit(None)
-        ).otherwise(F.col("oppervlakte")),
+        "bouwjaar": null_dummy(F.col("bouwjaar"), dummy_values=[1005], gt=2040),
+        "oppervlakte": null_dummy(
+            F.col("oppervlakte"), dummy_values=[999999.0, 1.0]
+        ),
     })
     return conditional_orphan_delete(
         out,

@@ -127,13 +127,11 @@ def q_j1(spark, sf_dir):
 )
 def q_j2(spark, sf_dir):
     c = _t(spark, sf_dir, "customer").withColumn("nation_name", F.lit(""))
-    n = _t(spark, sf_dir, "nation").filter(F.col("n_regionkey") < 2)
-    updated = joins.update_join(
-        c,
-        n.select("n_nationkey", "n_name"),
-        on=F.col("c_nationkey") == F.col("n_nationkey"),
-        set_cols={"nation_name": F.col("n_name")},
+    n = _t(spark, sf_dir, "nation").filter(F.col("n_regionkey") < 2).select(
+        F.col("n_nationkey").alias("c_nationkey"),
+        F.col("n_name").alias("nation_name"),
     )
+    updated = joins.update_join(c, n, "c_nationkey")
     return updated.select("c_custkey", "c_name", "nation_name")
 
 
@@ -954,11 +952,13 @@ def q_f8(spark, sf_dir):
 # evidence for new executing code), which by construction also covers
 # the five r11 rewrites the r11 driver window never sampled
 # (decontaminate_bloom, ml_pagerank_converged, dedup_simhash,
-# sample_dsir, sim_ivfpq_topk — VERDICT r11 #5). The remaining slots
-# take 10 of the r7-stale cohort (oldest evidence; the 6 deferred —
-# a4_distinct, a5_dedup_scan, p6_conditional_name,
-# p7_geometry_roundtrip, w3_rank_battery, url_domain_cap — plus
-# url_canonical_dedup and url_domain_stats re-queue for r13, all from
+# sample_dsir, sim_ivfpq_topk — VERDICT r11 #5), then the two callers
+# of the rewritten update_join (j2_update_join, j3_plaats_overlay). The
+# remaining slots take 8 of the r7-stale cohort (oldest evidence; the 7
+# deferred — a4_distinct, a5_dedup_scan, p6_conditional_name,
+# p7_geometry_roundtrip, w3_rank_battery, url_domain_cap,
+# url_canonicalize — plus url_canonical_dedup and url_domain_stats
+# re-queue for r13, all from
 # families still holding a window slot), plus the four r8-stale names
 # that keep every operator family represented in the first 50
 # (events_sessionize, f15_string_pack, j10_salted_skew_join,
@@ -985,11 +985,13 @@ _DRIVER_PRIORITY: tuple[str, ...] = (
     "text_main_content", "text_quality_metrics", "text_gopher_rules",
     "text_gopher_summary", "text_hash_classifier", "ml_auc_ranked",
     "ml_eval_calibration", "ml_eval_confusion",
-    # — r7-stale cohort (oldest greens; 10 of 18 non-rewritten names) —
-    "a3_latest_date", "j3_plaats_overlay", "j5_explode_self_join",
+    # — update-join rewrite: both callers of the one update_join —
+    "j2_update_join", "j3_plaats_overlay",
+    # — r7-stale cohort (oldest greens; 8 of the non-rewritten names) —
+    "a3_latest_date", "j5_explode_self_join",
     "j6_coalesce_override", "j8_semi_join", "text_pii_redact",
     "tpch_q7_volume_shipping", "ts_window_battery",
-    "url_blocklist_filter", "url_canonicalize",
+    "url_blocklist_filter",
     # — r8-stale family-coverage fills —
     "events_sessionize", "f15_string_pack", "j10_salted_skew_join",
     "vocab_build",
@@ -1032,6 +1034,10 @@ _REWRITTEN_SINCE_DRIVER_ROW: tuple[str, ...] = (
     # probe), executing aggregate is new code
     "dedup_minhash_lsh", "dedup_verified_pairs", "dedup_incremental",
     "dedup_clusters", "dedup_lsh_recall", "split_leakage_safe",
+    # update_join(target, source, key) replaces the set_cols form: j2
+    # builds its source named after the target columns; j3 runs the
+    # plaats overlay that now goes through it (plans changed, rows equal)
+    "j2_update_join", "j3_plaats_overlay",
 )
 
 

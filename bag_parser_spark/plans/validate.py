@@ -20,7 +20,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bag_parser_spark.config import DEFAULT_CONFIG, EngineConfig
@@ -41,7 +41,6 @@ def validate_bag(
     openbare_ruimten: DataFrame,
     provincies: DataFrame,
     cfg: EngineConfig = DEFAULT_CONFIG,
-    spark: SparkSession | None = None,
 ) -> tuple[DataFrame, bool]:
     """Returns (report DataFrame, all_passed). Mirrors reference
     database_sqlite.py:621-758 check for check, with thresholds from cfg
@@ -170,8 +169,7 @@ def validate_bag(
     ]
 
     all_passed = all(r.passed for r in results)
-    spark = spark or adressen.sparkSession
-    report = spark.createDataFrame(
+    report = adressen.sparkSession.createDataFrame(
         [(r.check, str(r.value), r.passed) for r in results],
         "check string, value string, passed boolean",
     )

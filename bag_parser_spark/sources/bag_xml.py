@@ -314,7 +314,6 @@ def finalize_entity(
     raw: DataFrame,
     entity_name: str,
     cfg: EngineConfig = DEFAULT_CONFIG,
-    snapshot_date: str | None = None,
 ) -> DataFrame:
     """Post-parse DataFrame pipeline: P3-P5 active filter → S7 upsert →
     coordinate derivation → geometry convert/blank → typed projection.
@@ -328,8 +327,8 @@ def finalize_entity(
     entity = ENTITIES[entity_name]
     df = raw
     # F4: "active as of today" snapshot (reference utils.py:168-169);
-    # injectable for deterministic tests
-    snapshot = snapshot_date or cfg.snapshot_date or date.today().isoformat()
+    # cfg.snapshot_date pins it for deterministic runs
+    snapshot = cfg.snapshot_date or date.today().isoformat()
     if cfg.active_only:
         pred = scalars.temporal_validity_predicate(
             F.col("begindatum_geldigheid"),
@@ -372,10 +371,11 @@ def finalize_entity(
             F.col("verkorte_naam"),
             cfg.use_short_street_names,
         )
+    # an absent optional value is '' in the scan: NULL, not a failed cast
     for c in entity.int_fields:
-        derived[c] = F.col(c).cast("int")
+        derived[c] = scalars.nullif_empty(F.col(c)).cast("int")
     for c in entity.double_fields:
-        derived[c] = F.col(c).cast("double")
+        derived[c] = scalars.nullif_empty(F.col(c)).cast("double")
     return df.withColumns(derived).drop("__file__", "__ordinal__", "pos")
 
 
@@ -384,12 +384,10 @@ def read_bag_entity(
     path: str,
     entity_name: str,
     cfg: EngineConfig = DEFAULT_CONFIG,
-    snapshot_date: str | None = None,
 ) -> DataFrame:
     """Full S2 pipeline: plain local XML files at ``path`` → finalized
     entity DataFrame (see ``read_bag_entity_raw_native`` for the scan's
     contract)."""
     return finalize_entity(
-        read_bag_entity_raw_native(spark, path, entity_name),
-        entity_name, cfg, snapshot_date,
+        read_bag_entity_raw_native(spark, path, entity_name), entity_name, cfg
     )

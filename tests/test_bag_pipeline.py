@@ -106,7 +106,7 @@ def test_orphan_delete(bag):
     assert a.filter(F.col("openbare_ruimte_id").isNull()).count() == 0
 
 
-def test_validation_battery_passes(spark, bag):
+def test_validation_battery_passes(bag):
     report, ok = validate_bag(
         bag["adressen"],
         bag["gemeenten"],
@@ -114,7 +114,6 @@ def test_validation_battery_passes(spark, bag):
         bag["openbare_ruimten"],
         bag["provincies"],
         FIXTURE_CONFIG,
-        spark=spark,
     )
     failed = [r for r in report.collect() if not r["passed"]]
     assert ok, f"failed checks: {failed}"
@@ -132,7 +131,6 @@ def test_validation_catches_broken_data(spark, bag):
         bag["openbare_ruimten"],
         bag["provincies"],
         FIXTURE_CONFIG,
-        spark=spark,
     )
     assert not ok
     bad = {r["check"] for r in report.collect() if not r["passed"]}
@@ -289,7 +287,7 @@ def test_validation_report_on_broken_fixture(spark, bag, monkeypatch):
             lambda df, _real=real: actions.append(1) or _real(df),
         )
     report, ok = validate_bag(a, bag["gemeenten"], wpl, orr, bag["provincies"],
-                              FIXTURE_CONFIG, spark=spark)
+                              FIXTURE_CONFIG)
     assert 0 < len(actions) <= 5
     monkeypatch.undo()
     assert not ok

@@ -655,6 +655,69 @@ def test_ligplaats_without_poslist_imports_with_null_coordinates(
         == [None] * 4
 
 
+def _openbare_ruimte(woonplaats_ref: str) -> str:
+    return _stand(
+        "<Objecten:OpenbareRuimte>"
+        "<Objecten:identificatie>OR1</Objecten:identificatie>"
+        "<Objecten:naam>Kerkstraat</Objecten:naam>"
+        "<Objecten:status>Naamgeving uitgegeven</Objecten:status>"
+        + woonplaats_ref
+        + "<Historie:beginGeldigheid>2012-01-01</Historie:beginGeldigheid>"
+        "</Objecten:OpenbareRuimte>"
+    )
+
+
+def test_absent_typed_value_imports_as_null(spark, tmp_path):
+    """An OpenbareRuimte without WoonplaatsRef imports with a NULL
+    woonplaats_id: the scan's '' default reaches the typed projection as
+    NULL, not as a failed int cast. A non-numeric value still fails."""
+    d = tmp_path / "or"
+    d.mkdir()
+    (d / "or.xml").write_text(_openbare_ruimte(""), encoding="utf-8")
+    rows = read_bag_entity(spark, str(d), "OpenbareRuimte", CFG).collect()
+    assert [(r["id"], r["woonplaats_id"]) for r in rows] == [("OR1", None)]
+
+    (d / "or.xml").write_text(
+        _openbare_ruimte("<Objecten-ref:WoonplaatsRef>abc"
+                         "</Objecten-ref:WoonplaatsRef>"),
+        encoding="utf-8",
+    )
+    with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+        read_bag_entity(spark, str(d), "OpenbareRuimte", CFG).collect()
+
+
+def test_one_number_position_imports_with_null_rd_y(spark, tmp_path):
+    """A Verblijfsobject whose gml:pos holds one number keeps rd_x and
+    imports with NULL rd_y/latitude/longitude instead of failing the
+    position split."""
+    d = tmp_path / "vbo"
+    d.mkdir()
+    (d / "vbo.xml").write_text(
+        _vbo_xml().replace("155000.0 463000.0 0.0", "155000.0"),
+        encoding="utf-8",
+    )
+    r = read_bag_entity(spark, str(d), "Verblijfsobject", CFG).collect()[0]
+    assert [r[c] for c in ("rd_x", "rd_y", "latitude", "longitude")] == [
+        155000.0, None, None, None
+    ]
+
+
+def test_pand_without_poslist_parses_to_empty_ring(spark, tmp_path):
+    """With parse_geometries=True, a Pand without a posList converts its
+    empty ring to no points instead of casting '' to double."""
+    import json
+
+    (tmp_path / "9999PND0001.xml").write_text(
+        _stand(_record("Pand", "<Historie:beginGeldigheid>2012-01-01"
+                       "</Historie:beginGeldigheid>")),
+        encoding="utf-8",
+    )
+    rows = read_bag_entity(
+        spark, str(tmp_path / "9999PND*"), "Pand", _GEO_CFG
+    ).collect()
+    assert [json.loads(r["geometry"]) for r in rows] == [[[]]]
+
+
 def test_extract_bag_delivery_two_level_zip(spark, tmp_path):
     """The REAL delivery shape: one outer zip holding per-entity zips
     whose members are anonymous numbered XMLs. extract_bag_delivery

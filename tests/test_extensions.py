@@ -708,6 +708,46 @@ def test_salted_join_equals_plain_join(spark):
     )
 
 
+def test_update_join_matched_unmatched_and_new_columns(spark):
+    """Matched rows take the source value even when it is NULL, unmatched
+    rows keep theirs, and a source-only column is added, NULL where
+    unmatched."""
+    target = spark.createDataFrame(
+        [(1, "a", 10), (2, "b", 20), (3, "c", 30)], "k int, s string, v int"
+    )
+    source = spark.createDataFrame(
+        [(1, None, "x"), (2, "B", "y")], "k int, s string, extra string"
+    )
+    out = joins.update_join(target, source, "k")
+    assert out.columns == ["k", "s", "v", "extra"]
+    assert sorted(map(tuple, out.collect())) == [
+        (1, None, 10, "x"), (2, "B", 20, "y"), (3, "c", 30, None)
+    ]
+
+
+def test_update_join_keeps_callers_broadcast_hint(spark):
+    """With automatic broadcast off, a caller's F.broadcast(source) still
+    plans a BroadcastHashJoin through the operator's renames."""
+    target = spark.range(100).select(F.col("id").alias("k"), F.lit("t").alias("s"))
+    source = spark.range(0, 100, 7).select(
+        F.col("id").alias("k"), F.lit("u").alias("s")
+    )
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        hinted = joins.update_join(target, F.broadcast(source), "k")
+        plain = joins.update_join(target, source, "k")
+
+        def plan(df):
+            return df._jdf.queryExecution().executedPlan().toString()
+
+        assert "BroadcastHashJoin" in plan(hinted)
+        assert "BroadcastHashJoin" not in plan(plain)
+        assert hinted.filter(F.col("s") == "u").count() == 15
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
 def test_scd2_intervals_chain(spark):
     from bag_parser_spark.operators import timeseries
 

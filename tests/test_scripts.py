@@ -1,8 +1,9 @@
 """The scripts under ``scripts/`` import package names that no package
 code calls, so deleting a package function can break a script without
 breaking any other test. This check parses each script (no Spark
-session) and resolves every ``from bag_parser_spark... import name``,
-plus every ``module.attr`` read through a package module it imports.
+session) and resolves every ``from bag_parser_spark... import name`` and
+``from perfbench import name``, plus every ``module.attr`` read through a
+module it imports that way.
 """
 
 from __future__ import annotations
@@ -39,7 +40,7 @@ def test_script_package_imports_resolve(script):
         if (
             isinstance(node, ast.ImportFrom)
             and node.level == 0
-            and node.module.split(".")[0] == "bag_parser_spark"
+            and node.module.split(".")[0] in ("bag_parser_spark", "perfbench")
         ):
             for alias in node.names:
                 try:
